@@ -14,6 +14,7 @@ import json
 import os
 import sys
 import time
+import weakref
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
@@ -313,35 +314,7 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(Path(sf_dir).name.replace("sf", "") or 0.1)
     spark = get_spark(app_name="revtron-bench")
-
-    # warm the JVM/session so the first query doesn't pay startup cost
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    # ...and the Arrow Python workers (pandas/numpy import once per
-    # worker): the first pandas_udf query would otherwise be charged
-    # ~5s of interpreter spawn that isn't query work
-    import pandas as pd  # noqa: F401
-    from pyspark.sql.functions import col, pandas_udf
-
-    @pandas_udf("double")
-    def _warm(s):
-        return s
-
-    spark.range(256).repartition(64).select(
-        _warm(col("id").cast("double"))
-    ).collect()
-    # ...and the parquet datasource + noop sink (first read otherwise pays
-    # ~2s of JVM class-loading that isn't query work; a long-lived cluster
-    # session is always past this point)
-    from revtron_utils_spark.io import read_table
-
-    read_table(spark, sf_dir, "region").write.mode("overwrite").format("noop").save()
-    # ...and the in-memory columnar cache: the session's FIRST
-    # CachedBatch build pays ~2s of one-time codegen/JIT (measured at
-    # sf0.1 — a 270k-row persist cost 2.9s first, 0.5s after) that
-    # would otherwise be charged to whichever query persists first
-    _wc = spark.range(100_000).selectExpr("cast(id as string) s", "id").persist()
-    _wc.count()
-    _wc.unpersist()
+    warm_session(spark, sf_dir)
 
     queries = entry_mod.queries()
     timings: dict[str, float] = {}
@@ -368,14 +341,6 @@ def main() -> None:
         def _gc_now() -> int:
             return 0
 
-    def _release() -> None:
-        # release frames persisted inside operators so queries don't
-        # compete with earlier queries' caches for executor memory
-        from revtron_utils_spark.operators.dedup import release_caches
-
-        release_caches()
-        spark.catalog.clearCache()
-
     for name in HEADLINE:
         fn = queries[name]
         # 1-minute loadavg sampled at query START (round-11 verdict task
@@ -388,15 +353,12 @@ def main() -> None:
         except OSError:  # pragma: no cover - non-POSIX
             pass
         g0 = _gc_now()
-        t0 = time.perf_counter()
         try:
-            df = fn(spark, sf_dir)
-            df.write.mode("overwrite").format("noop").save()
-            timings[name] = round(time.perf_counter() - t0, 3)
+            timings[name] = round(run_noop(fn, spark, sf_dir), 3)
             gc_ms[name] = _gc_now() - g0
         except Exception as exc:  # one broken query must not zero the bench
             errors[name] = f"{type(exc).__name__}: {exc}"[:500]
-            _release()
+            release(spark)
             continue
         # warm (steady-state) pass: same full recompute — caches are
         # dropped between the two executions — but with the query's
@@ -404,15 +366,13 @@ def main() -> None:
         # session pays per run. Cold stays the headline (methodology
         # stable across rounds); warm isolates single-threaded Janino/
         # JIT compile bursts, which host contention inflates most.
-        _release()
+        release(spark)
         try:
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
-            warm[name] = round(time.perf_counter() - t0, 3)
+            warm[name] = round(run_noop(fn, spark, sf_dir), 3)
         except Exception:
             pass
         finally:
-            _release()
+            release(spark)
         # Outlier triage (round-9 verdict task 1): a single-run host
         # spike (top_supplier_q15 recorded 8.38s cold in r9-final vs
         # ~1.2s real) used to be indistinguishable from a regression.
@@ -424,9 +384,7 @@ def main() -> None:
         passes = [timings[name]] + ([w] if w is not None else [])
         if w is not None and timings[name] > max(2 * w, w + 1.0):
             try:
-                t0 = time.perf_counter()
-                fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
-                w2 = round(time.perf_counter() - t0, 3)
+                w2 = round(run_noop(fn, spark, sf_dir), 3)
                 passes.append(w2)
                 suspects[name] = {
                     "cold": timings[name],
@@ -437,7 +395,7 @@ def main() -> None:
             except Exception:
                 pass
             finally:
-                _release()
+                release(spark)
         qmin[name] = round(min(passes), 3)
 
     total = round(sum(timings.values()), 3)
@@ -495,6 +453,65 @@ def main() -> None:
     print(line)
     if errors:
         sys.exit(2)
+
+
+_WARMED: weakref.WeakSet = weakref.WeakSet()
+
+
+def warm_session(spark, sf_dir: str) -> None:
+    """Warm the JVM/session so the first timed query doesn't pay startup
+    cost; a session is warmed once. The ``region`` read is skipped when
+    ``sf_dir`` has no region table (the scale-study fixture directories)."""
+    if spark in _WARMED:
+        return
+    _WARMED.add(spark)
+    spark.range(1_000_000).selectExpr("sum(id)").collect()
+    # ...and the Arrow Python workers (pandas/numpy import once per
+    # worker): the first pandas_udf query would otherwise be charged
+    # ~5s of interpreter spawn that isn't query work
+    import pandas as pd  # noqa: F401
+    from pyspark.sql.functions import col, pandas_udf
+
+    @pandas_udf("double")
+    def _warm(s):
+        return s
+
+    spark.range(256).repartition(64).select(
+        _warm(col("id").cast("double"))
+    ).collect()
+    # ...and the parquet datasource + noop sink (first read otherwise pays
+    # ~2s of JVM class-loading that isn't query work; a long-lived cluster
+    # session is always past this point)
+    from revtron_utils_spark.io import read_table
+
+    if os.path.exists(f"{sf_dir}/region.parquet"):
+        read_table(spark, sf_dir, "region").write.mode("overwrite").format(
+            "noop"
+        ).save()
+    # ...and the in-memory columnar cache: the session's FIRST
+    # CachedBatch build pays ~2s of one-time codegen/JIT (measured at
+    # sf0.1 — a 270k-row persist cost 2.9s first, 0.5s after) that
+    # would otherwise be charged to whichever query persists first
+    _wc = spark.range(100_000).selectExpr("cast(id as string) s", "id").persist()
+    _wc.count()
+    _wc.unpersist()
+
+
+def release(spark) -> None:
+    """Release frames persisted inside operators, so queries don't
+    compete with earlier queries' caches for executor memory."""
+    from revtron_utils_spark.operators.dedup import release_caches
+
+    release_caches()
+    spark.catalog.clearCache()
+
+
+def run_noop(fn, spark, sf_dir: str) -> float:
+    """Build query ``fn`` and force it end-to-end with the ``noop`` sink;
+    returns the wall seconds of build plus execution."""
+    t0 = time.perf_counter()
+    fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
+    return time.perf_counter() - t0
 
 
 if __name__ == "__main__":

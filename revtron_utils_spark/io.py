@@ -12,6 +12,9 @@ time; pushdown on other columns is unaffected.
 
 from __future__ import annotations
 
+import os
+import stat
+from collections import OrderedDict
 from functools import lru_cache
 
 from pyspark.sql import DataFrame, SparkSession
@@ -61,36 +64,52 @@ def _ltz(df: DataFrame) -> DataFrame:
 # build overhead. A DataFrame is an immutable LAZY plan: reusing it
 # caches no data (every action still scans parquet), it only skips
 # re-building an identical relation, like Spark's own session-level
-# FileStatusCache but across read calls. Keyed on the session OBJECT so
-# a stopped/recreated session never sees a stale frame; entries are
-# plan-sized, so the strong reference is harmless.
-_frame_cache: dict[tuple[int, str], tuple[int, DataFrame]] = {}
-_frame_cache_sessions: list[SparkSession] = []  # keep keyed sessions alive
+# FileStatusCache but across read calls. Keyed on the session's id: the
+# cached frame holds its session, so that id cannot be reused while the
+# entry lives. LRU-bounded, so neither frames nor sessions pile up in a
+# long-running process.
+_FRAME_CACHE_MAX = 128
+_frame_cache: OrderedDict[tuple[int, str], tuple[tuple, DataFrame]] = OrderedDict()
 
 
-def _path_stamp(path: str) -> int:
-    """mtime_ns of the file/dir — a rewritten table (engine-managed
-    ``current`` dirs) must invalidate its cached relation, whose file
-    listing is pinned at build time."""
-    import os
-
+def _path_stamp(path: str) -> tuple | None:
+    """What a rewrite of ``path`` changes, whose file listing a cached
+    relation pins at build time. A file costs one ``stat``. A directory
+    (engine-managed ``current`` dirs, partitioned datasets) is walked:
+    a write into a partition subdirectory leaves the top directory's
+    mtime alone, but not the newest mtime, entry count or total size
+    under it. ``None`` when ``os.stat`` cannot see the path (non-local
+    URIs): nothing could tell such an entry is stale, so it is not
+    cached."""
     try:
-        return os.stat(path).st_mtime_ns
+        st = os.stat(path)
+        if not stat.S_ISDIR(st.st_mode):
+            return (st.st_ino, st.st_mtime_ns, st.st_size)
+        n = size = newest = 0
+        for root, _dirs, files in os.walk(path):
+            for p in [root, *(os.path.join(root, f) for f in files)]:
+                s = os.stat(p)
+                n, size, newest = n + 1, size + s.st_size, max(newest, s.st_mtime_ns)
+        return (st.st_ino, n, size, newest)
     except OSError:
-        return -1
+        return None
 
 
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     """``spark.read.parquet`` that transparently handles timestamp[ns]."""
-    key = (id(spark), path)
     stamp = _path_stamp(path)
+    if stamp is None:
+        return _read_parquet_uncached(spark, path)
+    key = (id(spark), path)
     hit = _frame_cache.get(key)
     if hit is not None and hit[0] == stamp:
+        _frame_cache.move_to_end(key)
         return hit[1]
     df = _read_parquet_uncached(spark, path)
-    if spark not in _frame_cache_sessions:
-        _frame_cache_sessions.append(spark)
     _frame_cache[key] = (stamp, df)
+    _frame_cache.move_to_end(key)
+    while len(_frame_cache) > _FRAME_CACHE_MAX:
+        _frame_cache.popitem(last=False)
     return df
 
 

@@ -688,6 +688,11 @@ def dawid_skene(
     # §1.2); both fold out of one two-level aggregate. NULL labels are
     # tracked separately (collect_set drops them) so the catalog order
     # reproduces the old distinct().orderBy(asc) exactly — NULL first.
+    # The per-item label sets are exploded back to rows between the two
+    # levels, so the top-level collect_set dedupes as it merges: its
+    # buffer holds the label catalog, not items × labels (max(c) and
+    # max(hn) are unaffected by the repeated rows; explode_outer keeps
+    # items whose every label is NULL).
     probe = (
         votes.groupBy("i")
         .agg(
@@ -695,11 +700,10 @@ def dawid_skene(
             F.collect_set("m").alias("ls"),
             F.max(F.col("m").isNull()).alias("hn"),
         )
+        .select("c", "hn", F.explode_outer("ls").alias("m"))
         .agg(
             F.max("c").alias("mx"),
-            F.array_sort(
-                F.array_distinct(F.flatten(F.collect_list("ls")))
-            ).alias("labs"),
+            F.array_sort(F.collect_set("m")).alias("labs"),
             F.max("hn").alias("has_null"),
         )
         .first()

@@ -61,27 +61,30 @@ def _persist(df: DataFrame) -> DataFrame:
 
 
 def _spread_if_narrow(df: DataFrame) -> DataFrame:
-    """Round-robin-spread ``df`` when its scan parallelism is below the
-    cluster's, so a heavy projection built ON TOP of the result runs on
+    """Round-robin-spread a narrow leaf file scan to the cluster's
+    parallelism, so a heavy projection built ON TOP of the result runs on
     every core — a small parquet table is one split, and the
     text→shingle→hash pipeline otherwise executes in a single scan task
     (guide §2.5 input skew). Scale-adaptive no-op: at real scale the
-    input already has ≥ cores splits. AQE/Connect-safe probe (the
-    cochran_q r13 convention): estimate splits from the input FILE
-    listing — no execution, no RDD translation; an in-memory relation
-    lists no files, estimates 0 and spreads."""
+    input already has ≥ cores splits. Only a leaf file scan (projections
+    and filters over one file relation) spreads: a frame that lists no
+    input files (in-memory) or is already shuffled passes through, since
+    another round-robin Exchange would re-shuffle its payload for
+    nothing. Splits are estimated from Spark's own listing of the
+    relation (the cochran_q r13 convention: no execution, no RDD
+    translation, any filesystem Spark reads)."""
     try:
+        node = df._jdf.queryExecution().optimizedPlan()
+        while node.nodeName() in ("Project", "Filter"):
+            node = node.children().head()
+        if node.nodeName() != "LogicalRelation":
+            return df
+        rel = node.relation()
         par = df.sparkSession.sparkContext.defaultParallelism
-        files = df.inputFiles()
-        import os as _os
-
-        nbytes = sum(
-            _os.stat(f.removeprefix("file:")).st_size for f in files[:256]
-        )
-        est_splits = max(len(files), nbytes // (128 << 20))
+        est_splits = max(len(rel.inputFiles()), rel.sizeInBytes() // (128 << 20))
         if est_splits < par:
             return df.repartition(par)
-    except Exception:  # pragma: no cover - non-local URIs / no SparkContext
+    except Exception:  # pragma: no cover - Spark Connect / non-file relation
         pass
     return df
 

@@ -603,9 +603,37 @@ def test_spread_if_narrow_spreads_small_scans_only(spark):
         out = _spread_if_narrow(df)
         assert out.rdd.getNumPartitions() == par
         assert sorted(r["id"] for r in out.collect()) == list(range(1000))
-    # in-memory relation: no input files -> estimated 0 splits -> spread
+    # in-memory relation: not a file scan -> returned as is (a range
+    # already has defaultParallelism partitions)
     mem = spark.range(10).toDF("id")
     assert _spread_if_narrow(mem).rdd.getNumPartitions() == par
+
+
+def test_spread_if_narrow_passes_shuffled_and_in_memory_frames_through(spark, tmp_path):
+    """Only a leaf file scan spreads: a frame that is already shuffled,
+    or lists no input files, gains no round-robin Exchange."""
+    from revtron_utils_spark.operators.dedup import _spread_if_narrow
+
+    def exchanges(df):
+        return df._jdf.queryExecution().executedPlan().toString().count("Exchange")
+
+    # a private one-file table: a shared fixture frame may be cached by
+    # another test, and a cached plan is no longer a file scan
+    spark.range(100).selectExpr(
+        "id AS doc_id", "cast(id % 3 AS string) AS lang", "'a b c' AS text"
+    ).coalesce(1).write.parquet(str(tmp_path / "docs"))
+    docs = spark.read.parquet(str(tmp_path / "docs"))
+    for df in (
+        docs.repartition(3, "lang"),
+        docs.groupBy("lang").count(),
+        spark.createDataFrame([(1, "a b c")], "doc_id long, text string"),
+    ):
+        out = _spread_if_narrow(df)
+        assert out is df
+        assert exchanges(out) == exchanges(df)
+    # the narrow leaf scan itself (one file, projections on top) spreads
+    narrow = docs.select("doc_id", "text").filter("doc_id >= 0")
+    assert exchanges(_spread_if_narrow(narrow)) == exchanges(narrow) + 1
 
 
 def test_hashed_tf_embedding_l2_matches_counts_over_norm(spark):

@@ -259,6 +259,52 @@ def test_dawid_skene_panel_guard(spark):
     assert out.collect()[0]["ds_label"] == "x"
 
 
+def test_dawid_skene_label_catalog_many_items_few_labels(spark):
+    """The label catalog is deduped between the probe's two aggregation
+    levels: many items voting over a few labels still yield the ASC
+    catalog the oracle uses, and the ``max_labels`` guard counts the same
+    distinct labels, NULL among them."""
+    import duckdb
+
+    from revtron_utils_spark.operators.annotation import (
+        dawid_skene,
+        dawid_skene_oracle_sql,
+    )
+
+    labels = ["b", "a", "c"]
+    votes = [(i, r, labels[(i * 7 + r * (i % 4)) % 3]) for i in range(600) for r in range(3)]
+    schema = "item long, rater int, label string"
+    df = spark.createDataFrame(votes, schema)
+    with pytest.raises(ValueError, match="3 distinct labels exceed max_labels=2"):
+        dawid_skene(df, "item", "rater", "label", max_labels=2)
+    with_null = spark.createDataFrame(votes + [(600, 0, None)], schema)
+    with pytest.raises(ValueError, match="4 distinct labels exceed max_labels=3"):
+        dawid_skene(with_null, "item", "rater", "label", max_labels=3)
+
+    got = sorted(
+        tuple(r)
+        for r in dawid_skene(df, "item", "rater", "label", iterations=1)
+        .select("item", "ds_label", "q_int", "n_raters")
+        .collect()
+    )
+    con = duckdb.connect()
+    con.execute("CREATE TABLE votes_t (item BIGINT, rater INT, label VARCHAR)")
+    con.executemany("INSERT INTO votes_t VALUES (?, ?, ?)", votes)
+    want = sorted(
+        tuple(r)
+        for r in con.execute(
+            dawid_skene_oracle_sql(
+                "SELECT item, rater, label FROM votes_t",
+                "item",
+                "rater",
+                "label",
+                iterations=1,
+            )
+        ).fetchall()
+    )
+    assert got == want
+
+
 def test_cuped_reduces_to_group_means_when_uncorrelated(spark):
     """θ from exact moments; with a constant covariate var=0 → NULL θ;
     with a perfectly correlated covariate the adjustment removes the

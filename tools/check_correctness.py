@@ -60,6 +60,8 @@ def main():
     sf_dir = args[0] if args and "/" in args[0] else "/root/testdata/sf0.001"
     only = [a for a in args if "/" not in a]
 
+    from bench import release
+
     spark = get_spark(app_name="check-correctness", shuffle_partitions=8)
     con = duckdb.connect()
     for t in TABLES:
@@ -84,11 +86,8 @@ def main():
             continue
         finally:
             # frames persisted inside operators must not pile up across
-            # the ~100-query sweep (same hygiene as bench.py)
-            from revtron_utils_spark.operators.dedup import release_caches
-
-            release_caches()
-            spark.catalog.clearCache()
+            # the sweep (same hygiene as bench.py)
+            release(spark)
         if name not in oracles:
             results[name] = {"mode": "rows_only", "spark_rows": len(srows), "err": None}
             print(f"ok?   {name}: rows-only check, {len(srows)} rows ({time.time()-t0:.1f}s)")

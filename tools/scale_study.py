@@ -316,6 +316,7 @@ def main() -> None:
     names = args.queries.split(",")
 
     import __spark_entry__ as entry_mod
+    from bench import release, run_noop, warm_session
     from revtron_utils_spark.session import get_spark
 
     for n in sizes:
@@ -351,27 +352,15 @@ def main() -> None:
             make_fixtures(d, n)
 
     spark = get_spark(app_name="scale-study")
-    # session + Arrow-worker warmup, as in bench.py
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    import pandas as pd  # noqa: F401
-    from pyspark.sql.functions import col, pandas_udf
-
-    @pandas_udf("double")
-    def _warm(s):
-        return s
-
-    spark.range(256).repartition(64).select(_warm(col("id").cast("double"))).collect()
+    warm_dir = str(Path(args.out) / f"n{sizes[0]}")
+    warm_session(spark, warm_dir)
 
     queries = entry_mod.queries()
     # one untimed pass at the smallest size: plan compile + codegen for
     # each query shape happens here, not inside the first timed point
-    warm_dir = str(Path(args.out) / f"n{sizes[0]}")
     for q in names:
-        queries[q](spark, warm_dir).write.mode("overwrite").format("noop").save()
-        from revtron_utils_spark.operators.dedup import release_caches
-
-        release_caches()
-        spark.catalog.clearCache()
+        run_noop(queries[q], spark, warm_dir)
+        release(spark)
 
     times: dict[str, dict[int, float]] = {q: {} for q in names}
     rows: dict[str, dict[int, int]] = {q: {} for q in names}
@@ -387,10 +376,7 @@ def main() -> None:
                 cnt = df.count()
             times[q][n] = round(time.perf_counter() - t0, 3)
             rows[q][n] = cnt
-            from revtron_utils_spark.operators.dedup import release_caches
-
-            release_caches()
-            spark.catalog.clearCache()
+            release(spark)
             print(f"n={n} {q}: {times[q][n]}s ({cnt} rows)", file=sys.stderr)
 
     out = {}
