@@ -16,9 +16,9 @@ from .engine import ColumnModel, Engine
 from .functions.timer import timer
 from .operators.merge import (
     MergeKeyError,
-    affected_keys,
     delete_where,
     keyed_update,
+    observe_hits,
     upsert_merge,
     upsert_merge_many,
 )
@@ -33,12 +33,12 @@ __all__ = [
     "Engine",
     "MergeKeyError",
     "WhereDSLError",
-    "affected_keys",
     "compile_where",
     "delete_where",
     "get_spark",
     "keyed_update",
     "kwargs_filters",
+    "observe_hits",
     "timer",
     "upsert_merge",
     "upsert_merge_many",

@@ -26,8 +26,9 @@ import uuid
 from dataclasses import dataclass, field
 from pathlib import Path
 from typing import Any, Sequence
+from urllib.parse import unquote, urlparse
 
-from pyspark.sql import DataFrame, Row, SparkSession
+from pyspark.sql import DataFrame, Observation, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -35,9 +36,9 @@ from .dsl import Where, compile_where
 from .io import read_parquet
 from .operators.merge import (
     MergeKeyError,
-    affected_keys,
     delete_where,
     keyed_update,
+    observe_hits,
     upsert_merge,
 )
 
@@ -486,13 +487,15 @@ class Engine:
         """J1 keyed merge (``main.py:88-117``). Match key = registered PK
         (error when none — main.py:97-99); incoming NULL preserves the
         existing value unless ``overwrite_with_null``. Returns the affected
-        keys (RETURNING analog)."""
+        keys (RETURNING analog): every distinct source key, in no
+        particular order, computed by the write itself."""
         pk = self.pk_registry.get(table_name)
         if not pk:
             raise MergeKeyError(
                 f"table {table_name!r} has no registered primary key; upsert requires one"
             )
         source = self._as_df(data, like=self.get_table(table_name))
+        obs = Observation() if return_keys else None
         mp = self._managed_path(table_name)
         if (
             self.versioned
@@ -502,7 +505,7 @@ class Engine:
         ):
             # transactional, file-pruned merge: one manifest commit
             self._vt(table_name).merge(
-                source, pk, overwrite_with_null=overwrite_with_null
+                source, pk, overwrite_with_null=overwrite_with_null, observation=obs
             )
             self._catalog_version += 1
         else:
@@ -513,12 +516,14 @@ class Engine:
                 pk,
                 overwrite_with_null=overwrite_with_null,
                 insert_defaults=self.default_registry.get(table_name),
+                returning=return_keys,
             )
+            if obs is not None:
+                merged = observe_hits(merged, obs, pk)
             self._write_managed(table_name, merged)
-        if return_keys:
-            keys = [r.asDict() for r in affected_keys(source, pk).collect()]
-            return keys
-        return None
+        if obs is None:
+            return None
+        return [r.asDict() for r in obs.get["keys"]]
 
     def update(
         self,
@@ -527,22 +532,24 @@ class Engine:
         on: str | Sequence[str],
     ) -> int:
         """J2 keyed bulk update (``main.py:250-269``); returns matched-row
-        count (the rowcount analog)."""
+        count (the rowcount analog), computed by the write itself. SQL
+        UPDATE semantics: a NULL ``on`` key matches no row."""
         target = self.get_table(table_name)
         source = self._as_df(data, like=target)
-        on_cols = [on] if isinstance(on, str) else list(on)
-        matched = target.join(source.select(*on_cols).distinct(), on_cols, "left_semi").count()
-        self._write_managed(table_name, keyed_update(target, source, on_cols))
-        return matched
+        obs = Observation()
+        updated = keyed_update(target, source, on, returning=True)
+        self._write_managed(table_name, observe_hits(updated, obs))
+        return obs.get["n"]
 
     def delete(self, table_name: str, where: Where = None) -> int:
         """J3 delete-where (``main.py:271-285``); returns deleted-row
-        count."""
+        count: the rows read minus the rows the write kept."""
         target = self.get_table(table_name)
+        before = self._row_count(table_name, target)
+        obs = Observation()
         remaining = delete_where(target, compile_where(where))
-        before = target.count()
-        self._write_managed(table_name, remaining)
-        return before - self.get_table(table_name).count()
+        self._write_managed(table_name, observe_hits(remaining, obs))
+        return before - obs.get["n"]
 
     # ------------------------------------------------------------------ #
     # internals
@@ -551,6 +558,19 @@ class Engine:
     def _require_warehouse(self) -> None:
         if not self.warehouse_dir:
             raise ValueError("Engine has no warehouse_dir; managed tables unavailable")
+
+    def _row_count(self, table_name: str, df: DataFrame) -> int:
+        """Rows of ``df``, read from the parquet footers of its files when
+        it is a managed table (no Spark job); other tables are counted
+        by Spark."""
+        if self._managed_path(table_name) is None:
+            return df.count()
+        import pyarrow.parquet as pq
+
+        return sum(
+            pq.ParquetFile(unquote(urlparse(f).path)).metadata.num_rows
+            for f in df.inputFiles()
+        )
 
     def _as_df(self, data: DataFrame | dict | list[dict], like: DataFrame) -> DataFrame:
         if isinstance(data, DataFrame):

@@ -1,3 +1,3 @@
-from .merge import affected_keys, delete_where, keyed_update, upsert_merge, upsert_merge_many
+from .merge import delete_where, keyed_update, observe_hits, upsert_merge, upsert_merge_many
 
-__all__ = ["affected_keys", "delete_where", "keyed_update", "upsert_merge", "upsert_merge_many"]
+__all__ = ["delete_where", "keyed_update", "observe_hits", "upsert_merge", "upsert_merge_many"]

@@ -10,8 +10,8 @@ DataFrame→DataFrame transforms:
   does **not** clobber an existing value (``overwrite_with_null=True``
   restores plain overwrite). (main.py:106-113)
 * **update** — keyed bulk ``UPDATE t SET <cols> WHERE on = :on``; unlike
-  upsert this DOES write NULLs through (plain SQL UPDATE semantics).
-  (main.py:250-269)
+  upsert this DOES write NULLs through, and a NULL key matches nothing
+  (plain SQL UPDATE semantics). (main.py:250-269)
 * **delete** — ``DELETE FROM t WHERE <pred>``: removes rows where the
   predicate is TRUE; rows where it evaluates NULL are KEPT (SQL
   three-valued logic). (main.py:271-285)
@@ -31,11 +31,13 @@ from __future__ import annotations
 from functools import reduce
 from typing import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 _T_MARK = "__rvt_t__"
 _S_MARK = "__rvt_s__"
+#: boolean column ``returning=True`` adds: TRUE on rows the source wrote
+_HIT = "__rvt_hit__"
 
 
 class MergeKeyError(ValueError):
@@ -43,11 +45,12 @@ class MergeKeyError(ValueError):
     (``main.py:97-99``)."""
 
 
-def _key_cond(keys: Sequence[str]) -> Column:
-    return reduce(
-        lambda a, b: a & b,
-        [F.col(f"t.{k}").eqNullSafe(F.col(f"s.{k}")) for k in keys],
-    )
+def _key_cond(keys: Sequence[str], null_safe: bool = True) -> Column:
+    def eq(k: str) -> Column:
+        t, s = F.col(f"t.{k}"), F.col(f"s.{k}")
+        return t.eqNullSafe(s) if null_safe else t == s
+
+    return reduce(lambda a, b: a & b, [eq(k) for k in keys])
 
 
 def dedupe_source(source: DataFrame, keys: Sequence[str]) -> DataFrame:
@@ -76,6 +79,7 @@ def upsert_merge(
     overwrite_with_null: bool = False,
     dedupe: bool = True,
     insert_defaults: dict | None = None,
+    returning: bool = False,
 ) -> DataFrame:
     """Merge ``source`` into ``target`` on ``keys``.
 
@@ -89,6 +93,9 @@ def upsert_merge(
     ``dedupe`` (default) collapses duplicate source keys first — see
     :func:`dedupe_source`; pass ``dedupe=False`` only when the source is
     provably key-unique and the extra window matters.
+
+    ``returning`` adds a boolean column, TRUE on every row the source
+    updated or inserted, for :func:`observe_hits` to aggregate and drop.
     """
     keys = list(keys)
     if not keys:
@@ -144,6 +151,8 @@ def upsert_merge(
             out_cols.append(
                 F.when(s_present, F.col(f"s.{c}")).otherwise(F.lit(None)).alias(c)
             )
+    if returning:
+        out_cols.append(s_present.alias(_HIT))
     return joined.select(*out_cols)
 
 
@@ -152,16 +161,21 @@ def keyed_update(
     source: DataFrame,
     on: str | Sequence[str],
     dedupe: bool = True,
+    returning: bool = False,
 ) -> DataFrame:
     """Bulk keyed UPDATE: for target rows whose ``on`` key matches a source
     row, overwrite the source-provided columns (NULLs write through —
-    plain UPDATE semantics, unlike upsert). No insert branch.
+    plain UPDATE semantics, unlike upsert). No insert branch. Keys match
+    with ``=``, so a NULL key, on either side, updates nothing.
 
     Mirrors ``Database.update`` (``main.py:250-269``) including multi-column
     ``on`` keys. The reference renames key fields to ``_<col>`` bindparams
     (main.py:260-266) — an SQL-text artifact we don't need. Duplicate
     source keys collapse deterministically (``dedupe``) — a left join
     against repeated keys would multiply target rows.
+
+    ``returning`` adds a boolean column, TRUE on matched rows, for
+    :func:`observe_hits` to aggregate and drop.
     """
     on = [on] if isinstance(on, str) else list(on)
     if not on:
@@ -172,7 +186,7 @@ def keyed_update(
 
     t = target.alias("t")
     s = source.withColumn(_S_MARK, F.lit(1)).alias("s")
-    joined = t.join(s, _key_cond(on), "left_outer")
+    joined = t.join(s, _key_cond(on, null_safe=False), "left_outer")
     matched = F.col(f"s.{_S_MARK}").isNotNull()
 
     out_cols = []
@@ -183,6 +197,8 @@ def keyed_update(
             )
         else:
             out_cols.append(F.col(f"t.{c}").alias(c))
+    if returning:
+        out_cols.append(matched.alias(_HIT))
     return joined.select(*out_cols)
 
 
@@ -196,12 +212,27 @@ def delete_where(df: DataFrame, predicate: Column | None) -> DataFrame:
     return df.filter(~F.coalesce(predicate, F.lit(False)))
 
 
-def affected_keys(source: DataFrame, keys: Sequence[str]) -> DataFrame:
-    """The upsert's RETURNING analog (``main.py:106, 116``): Postgres
-    ``INSERT..ON CONFLICT DO UPDATE..RETURNING pk`` returns every incoming
-    row's key (each is either inserted or updated), so this is simply the
-    distinct source keys — no extra join against the target needed."""
-    return source.select(*keys).distinct()
+def observe_hits(
+    df: DataFrame, obs: Observation, keys: Sequence[str] | None = None
+) -> DataFrame:
+    """The mutations' RETURNING / rowcount analog (``main.py:106, 116``),
+    computed by the write itself: attach ``obs`` to the root of the frame
+    about to be written, so no second Spark job runs.
+
+    ``n`` counts the rows flagged by ``returning=True`` (every row when
+    ``df`` has no flag column); ``keys`` collects the distinct ``keys``
+    of those rows as structs, in no particular order. For an upsert that
+    is every incoming key, inserted or updated — Postgres ``INSERT .. ON
+    CONFLICT DO UPDATE .. RETURNING pk``. The flag column is dropped
+    above the observation. The observation must sit at the root: PySpark
+    4.1 cannot read one whose subtree the optimizer or AQE replaced by
+    an empty relation (a ``limit(0)``, a join side found empty), while a
+    root observation reports ``n = 0`` then."""
+    hit = F.col(_HIT) if _HIT in df.columns else F.lit(True)
+    aggs = [F.count_if(hit).alias("n")]
+    if keys:
+        aggs.append(F.collect_set(F.when(hit, F.struct(*keys))).alias("keys"))
+    return df.observe(obs, *aggs).drop(_HIT)
 
 
 def upsert_merge_many(

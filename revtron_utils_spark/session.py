@@ -14,8 +14,13 @@ handles skew and small-partition coalescing after each shuffle, and
 from __future__ import annotations
 
 import os
+from pathlib import Path
 
 from pyspark.sql import SparkSession
+
+#: directory holding the ``revtron_utils_spark`` package
+_PACKAGE_ROOT = str(Path(__file__).resolve().parent.parent)
+_PYTHONPATH_KEY = "spark.executorEnv.PYTHONPATH"
 
 
 def get_spark(
@@ -28,6 +33,11 @@ def get_spark(
 
     Honors ``SPARK_GRAFT_CPUS`` for local core count. On a real
     cluster pass ``master=None`` and let spark-submit decide.
+
+    Python workers fork from :mod:`revtron_utils_spark.worker_daemon`,
+    which keeps each task from re-reading ``pyspark.zip``; the package
+    root is appended to ``spark.executorEnv.PYTHONPATH`` so the workers
+    can import it from any working directory.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
     master = master or f"local[{cpus}]"
@@ -54,11 +64,17 @@ def get_spark(
     )
     # environment-driven overrides (cluster parameterization + local A/B
     # experiments): SPARK_GRAFT_CONF="spark.foo=1;spark.bar=2"
+    conf = {"spark.python.daemon.module": "revtron_utils_spark.worker_daemon"}
     env_conf = os.environ.get("SPARK_GRAFT_CONF", "")
     for pair in filter(None, env_conf.split(";")):
         k, _, v = pair.partition("=")
-        builder = builder.config(k.strip(), v.strip())
-    for k, v in (extra_conf or {}).items():
+        conf[k.strip()] = v.strip()
+    conf.update(extra_conf or {})
+    paths = [p for p in conf.get(_PYTHONPATH_KEY, "").split(os.pathsep) if p]
+    if _PACKAGE_ROOT not in paths:
+        paths.append(_PACKAGE_ROOT)
+    conf[_PYTHONPATH_KEY] = os.pathsep.join(paths)
+    for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

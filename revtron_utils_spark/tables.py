@@ -36,9 +36,9 @@ from dataclasses import dataclass
 from pathlib import Path
 from typing import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 
-from .operators.merge import delete_where, keyed_update, upsert_merge
+from .operators.merge import delete_where, keyed_update, observe_hits, upsert_merge
 
 
 class CommitConflict(RuntimeError):
@@ -185,29 +185,37 @@ class VersionedTable:
     def _is_evolved(self, version: int) -> bool:
         return bool(self._manifest(version).get("evolved"))
 
-    def _file_key_range(self, rel_path: str, key: str):
-        """(min, max) of ``key`` across a file's row groups, straight
-        from the parquet footer — no data read."""
+    def _file_key_stats(self, rel_path: str, key: str):
+        """(min, max, null count) of ``key`` across a file's row groups,
+        straight from the parquet footer — no data read. ``min``/``max``
+        are None when the file holds no non-NULL key; the whole result
+        is None when a row group lacks the stats."""
         import pyarrow.parquet as pq
 
         md = pq.ParquetFile(str(Path(self.path) / rel_path)).metadata
         idx = {md.schema.column(i).name: i for i in range(md.num_columns)}
         if key not in idx:
             return None
-        mins, maxs = [], []
+        mins, maxs, nulls = [], [], 0
         for rg in range(md.num_row_groups):
-            st = md.row_group(rg).column(idx[key]).statistics
-            if st is None or not st.has_min_max:
+            rg_md = md.row_group(rg)
+            st = rg_md.column(idx[key]).statistics
+            if st is None or not st.has_null_count:
                 return None  # no stats → must treat as matched
-            mins.append(st.min)
-            maxs.append(st.max)
-        return (min(mins), max(maxs)) if mins else None
+            nulls += st.null_count
+            if st.has_min_max:
+                mins.append(st.min)
+                maxs.append(st.max)
+            elif st.null_count != rg_md.num_rows:
+                return None  # non-NULL keys without bounds
+        return (min(mins, default=None), max(maxs, default=None), nulls)
 
     def merge(
         self,
         source: DataFrame,
         keys: Sequence[str],
         overwrite_with_null: bool = False,
+        observation: Observation | None = None,
     ) -> int:
         """Keyed upsert as a new version (snapshot-isolated: readers of
         older versions are untouched).
@@ -218,7 +226,13 @@ class VersionedTable:
         read, no write). On a key-clustered table (sorted/bucketed/
         Z-ordered writes) a merge touching a narrow key band rewrites a
         narrow slice of the table — the Delta/Iceberg MERGE cost model.
-        Files without usable stats are conservatively rewritten.
+        Keys match NULL-safely (as in :func:`upsert_merge`), so when the
+        source holds a NULL ``keys[0]`` every file whose footer counts a
+        NULL there is rewritten too. Files without usable stats are
+        conservatively rewritten.
+
+        ``observation``, when given, is filled by the write itself with
+        the upserted keys (see :func:`observe_hits`).
 
         ``source`` is persisted for the duration of the merge: its key
         bounds (pruning) and its rows (the rewrite) are two separate
@@ -233,22 +247,29 @@ class VersionedTable:
         k0 = keys[0]
         source = source.persist()
         try:
-            row = source.agg(F.min(k0), F.max(k0)).first()
-            s_lo, s_hi = row[0], row[1]
+            s_lo, s_hi, s_nulls = source.agg(
+                F.min(k0), F.max(k0), F.count_if(F.col(k0).isNull())
+            ).first()
 
             matched, untouched = [], []
             for f in all_files:
-                rng = self._file_key_range(f, k0) if s_lo is not None else None
+                stats = self._file_key_stats(f, k0) if s_lo is not None or s_nulls else None
+                if stats is None:
+                    matched.append(f)
+                    continue
+                lo, hi, nulls = stats
                 try:
-                    disjoint = rng is not None and (rng[1] < s_lo or rng[0] > s_hi)
+                    overlaps = (
+                        s_lo is not None and lo is not None and not (hi < s_lo or lo > s_hi)
+                    )
                 except TypeError:
                     # footer stats not comparable with the Spark-side bounds
                     # (e.g. binary columns) — conservatively rewrite the file
-                    disjoint = False
-                if disjoint:
-                    untouched.append(f)
-                else:
+                    overlaps = True
+                if overlaps or (s_nulls and nulls):
                     matched.append(f)
+                else:
+                    untouched.append(f)
 
             if matched:
                 reader = self.spark.read
@@ -262,8 +283,14 @@ class VersionedTable:
                 # schema-only empty target: all source rows are inserts
                 target = self.read(base).limit(0)
             merged = upsert_merge(
-                target, source, keys, overwrite_with_null=overwrite_with_null
+                target,
+                source,
+                keys,
+                overwrite_with_null=overwrite_with_null,
+                returning=observation is not None,
             )
+            if observation is not None:
+                merged = observe_hits(merged, observation, keys)
             files = untouched + self._write_files(merged)
             # untouched pre-evolution files may carry forward — keep the
             # evolved flag so reads keep merging schemas

@@ -385,3 +385,30 @@ def test_truncated_manifest_never_commits(spark, tmp_path):
     for v in t.history():
         m = json.loads((t._log_dir / f"{v:08d}.json").read_text())
         assert m["files"]  # complete, parseable, non-empty
+
+
+def test_merge_null_key_source_matches_null_key_files(spark, tmp_path):
+    """Keys match NULL-safely, and footer min/max ignore NULLs: a file
+    whose key range is disjoint from the source's is still rewritten when
+    both hold a NULL key, so versioned mode merges the NULL-key row in
+    place as symlink mode does (no duplicate), while a file with no NULL
+    key is still pruned."""
+    from revtron_utils_spark import Engine
+
+    schema = "k long, name string, v double"
+    base = spark.createDataFrame(
+        [(None, "null-row", 0.0)] + [(i, f"n{i}", float(i)) for i in range(1, 9)], schema
+    ).repartitionByRange(2, "k")
+    src = spark.createDataFrame([(None, "NULL-NEW", None), (100, "new", 1.0)], schema)
+    tables = {}
+    for versioned in (False, True):
+        eng = Engine(spark, warehouse_dir=str(tmp_path / f"wh{versioned}"), versioned=versioned)
+        eng.save_table("t", base, primary_key=["k"])
+        assert sorted(eng.upsert("t", src), key=str) == sorted([{"k": None}, {"k": 100}], key=str)
+        tables[versioned] = sorted(map(tuple, eng.get_table("t").collect()), key=str)
+    assert tables[True] == tables[False]
+    assert [r for r in tables[True] if r[0] is None] == [(None, "NULL-NEW", 0.0)]
+
+    vt = VersionedTable(spark, str(tmp_path / "whTrue" / "t"))
+    v0, v1 = (set(vt._manifest(v)["files"]) for v in vt.history()[-2:])
+    assert len(v0) == 2 and len(v0 & v1) == 1  # the NULL-free file carried over
