@@ -665,8 +665,11 @@ def dawid_skene(
     broadcast — crowd-scale rater panels would not fit).
 
     Output one row per item: ``(item, ds_label, q_int, n_raters)`` —
-    the MAP label (ties → label ASC) and its posterior in
-    [0, scale].
+    the MAP label (ties → label ASC, NULL first) and its posterior in
+    [0, scale]. A NULL label is a vote, as in :func:`majority_vote`: it
+    is one class of the catalog (counted by ``max_labels``), it counts
+    toward ``n_raters``, and a rater's NULL votes shape its confusion
+    row like any other label.
     """
     from .dedup import _persist
     from .graph import _lineage_cutter
@@ -742,7 +745,9 @@ def dawid_skene(
     q = votes.groupBy("i").agg(
         F.count(F.lit(1)).alias("_n"),
         *[
-            F.sum(F.when(F.col("m") == F.lit(lab), 1).otherwise(0)).alias(f"_c{j}")
+            F.sum(F.when(F.col("m").eqNullSafe(F.lit(lab)), 1).otherwise(0)).alias(
+                f"_c{j}"
+            )
             for j, lab in enumerate(labels)
         ],
     ).select(
@@ -827,7 +832,11 @@ def dawid_skene(
         # π: it's O(raters·labels) — rater-panel sized for review
         # boards, crowd-sized for crowdsourcing; AQE picks broadcast
         # only when it fits.
-        vf = votes.join(pi, ["r", "m"]).select("i", *[f"_pi{j}" for j in L])
+        # a NULL label is a vote: it matches its confusion row NULL-safely
+        v, p = votes.alias("v"), pi.alias("p")
+        vf = v.join(
+            p, (F.col("v.r") == F.col("p.r")) & F.col("v.m").eqNullSafe(F.col("p.m"))
+        ).select("v.i", *[f"p._pi{j}" for j in L])
         prod = vf.groupBy("i").agg(
             F.count(F.lit(1)).alias("_n"),
             *[
@@ -871,9 +880,13 @@ def dawid_skene(
         if n_labels > 1
         else F.col("_q0")
     )
-    best_label = F.coalesce(
-        *[F.when(F.col(f"_q{j}") == mx, F.lit(labels[j])) for j in L]
-    ) if n_labels > 1 else F.lit(labels[0])
+    # a CASE chain, not coalesce: the first matching branch wins even
+    # when its label is NULL (coalesce would skip it to the next tie)
+    best_label = F.lit(labels[0])
+    if n_labels > 1:
+        best_label = F.when(F.col("_q0") == mx, F.lit(labels[0]))
+        for j in L[1:]:
+            best_label = best_label.when(F.col(f"_q{j}") == mx, F.lit(labels[j]))
     return q.select(
         F.col("i").alias("item"),
         best_label.alias("ds_label"),
@@ -893,7 +906,9 @@ def dawid_skene_oracle_sql(
     """DuckDB twin of :func:`dawid_skene`: identical integer EM rounds,
     unrolled as MATERIALIZED CTEs (the `hits_oracle_sql` lesson —
     default CTE inlining re-evaluates the chain exponentially),
-    HUGEINT products, ``//`` floor division."""
+    HUGEINT products, ``//`` floor division. A NULL label is a vote:
+    every label match is ``IS NOT DISTINCT FROM`` and the MAP tie-break
+    sorts NULL first, as Spark does."""
     s = scale
     parts = [
         f"""WITH votes AS MATERIALIZED (
@@ -909,7 +924,7 @@ def dawid_skene_oracle_sql(
         f"""q0 AS MATERIALIZED (
   SELECT ni.i, lab.l, (COALESCE(c.c, 0) * {s}) // ni.n AS q
   FROM ni CROSS JOIN labels lab
-  LEFT JOIN cil c ON c.i = ni.i AND c.l = lab.l
+  LEFT JOIN cil c ON c.i = ni.i AND c.l IS NOT DISTINCT FROM lab.l
 )""",
     ]
     for k in range(1, iterations + 1):
@@ -928,7 +943,8 @@ def dawid_skene_oracle_sql(
             f"pi{k} AS MATERIALIZED (SELECT c.r, c.l, c.m,"
             f" GREATEST(1, (CAST(c.num AS HUGEINT) * {s})"
             f" // CAST(d.den AS HUGEINT)) AS pi"
-            f" FROM conf{k} c JOIN den{k} d ON c.r = d.r AND c.l = d.l)"
+            f" FROM conf{k} c JOIN den{k} d"
+            f" ON c.r = d.r AND c.l IS NOT DISTINCT FROM d.l)"
         )
         parts.append(
             f"prn{k} AS (SELECT l, SUM(q) + 1 AS num FROM {p} GROUP BY l)"
@@ -944,13 +960,14 @@ def dawid_skene_oracle_sql(
         )
         parts.append(
             f"vf{k} AS (SELECT v.i, p.l, p.pi"
-            f" FROM votes v JOIN pi{k} p ON v.r = p.r AND v.m = p.m)"
+            f" FROM votes v JOIN pi{k} p"
+            f" ON v.r = p.r AND v.m IS NOT DISTINCT FROM p.m)"
         )
         parts.append(
             f"prod{k} AS MATERIALIZED (SELECT vf.i, vf.l,"
             f" pri.p * list_reduce(list_prepend(CAST(1 AS HUGEINT),"
             f" list(CAST(vf.pi AS HUGEINT))), (a, b) -> a * b) AS prod"
-            f" FROM vf{k} vf JOIN pri{k} pri ON vf.l = pri.l"
+            f" FROM vf{k} vf JOIN pri{k} pri ON vf.l IS NOT DISTINCT FROM pri.l"
             f" GROUP BY vf.i, vf.l, pri.p)"
         )
         parts.append(
@@ -967,7 +984,7 @@ def dawid_skene_oracle_sql(
 SELECT b.i AS item, b.l AS ds_label, b.q AS q_int, ni.n AS n_raters
 FROM (
   SELECT i, l, q,
-         ROW_NUMBER() OVER (PARTITION BY i ORDER BY q DESC, l ASC) AS rn
+         ROW_NUMBER() OVER (PARTITION BY i ORDER BY q DESC, l ASC NULLS FIRST) AS rn
   FROM q{iterations}
 ) b JOIN ni ON b.i = ni.i
 WHERE b.rn = 1

@@ -89,6 +89,24 @@ def _spread_if_narrow(df: DataFrame) -> DataFrame:
     return df
 
 
+def _repartition_for_compute(df: DataFrame, *keys) -> DataFrame:
+    """Hash-partition ``df`` on ``keys`` for a stage whose per-key work is
+    quadratic in the key's rows (a bucket Gram matrix, an edit-distance
+    self-join). The one policy for such shuffles: pin the partition count
+    to ``max(defaultParallelism, spark.sql.shuffle.partitions)``. AQE
+    coalesces an unpinned shuffle by BYTES, and the input here is byte-
+    small but compute-heavy, so it could land in one task; AQE never
+    coalesces a shuffle with an explicit count. The pin never gives fewer
+    partitions than the unpinned shuffle starts with (so no more bytes per
+    task), and at least one per core of the cluster (guide §2.5)."""
+    spark = df.sparkSession
+    n = max(
+        spark.sparkContext.defaultParallelism,
+        int(spark.conf.get("spark.sql.shuffle.partitions")),
+    )
+    return df.repartition(n, *keys)
+
+
 def release_caches() -> int:
     """Unpersist every intermediate cached by dedup operators; returns
     the number released."""
@@ -1596,12 +1614,8 @@ def embedding_neardup_pairs(
                     )
 
         out = (
-            # keyed repartition WITHOUT a pinned partition count (r12
-            # judge note): an explicit `par0` froze the bucket shuffle
-            # at local defaultParallelism; leaving N off uses
-            # spark.sql.shuffle.partitions (same value locally) and
-            # stays AQE-sizeable at real scale (guide §2.2)
-            base.repartition(*keys)
+            # the Gram stage is quadratic per bucket
+            _repartition_for_compute(base, *keys)
             .mapInPandas(_bucket_pairs, out_schema)
             .withColumn("cosine", F.round("cosine", 6))
         )

@@ -35,7 +35,7 @@ def fuzzy_self_pairs(
     value-pair levenshteins + a row-generating join — ~30× faster, and
     the same skew logic (value dedup before the quadratic step) is what
     keeps entity resolution tractable on billions of rows."""
-    from .dedup import _spread_if_narrow
+    from .dedup import _repartition_for_compute, _spread_if_narrow
 
     # spread a narrow scan (r13): the id-expansion broadcast joins and
     # the final projection otherwise run on the single scan task of a
@@ -51,14 +51,11 @@ def fuzzy_self_pairs(
     bcols = [c for c in base.columns if c.startswith("_b")]
     vals = base.select("t", *bcols).distinct()
     if bcols:
-        # pin the value self-join's partitioning on the block key at
-        # cluster parallelism (r13): the distinct-value frame is BYTES-
-        # small, so AQE coalesced the join to ONE task while its
-        # levenshtein COMPUTE is quadratic per block — 2.45 s single-
-        # task at sf0.1. AQE sizes partitions by bytes, not compute
-        # (guide §2.5); defaultParallelism scales with the cluster.
-        par = df.sparkSession.sparkContext.defaultParallelism
-        vals = vals.repartition(par, *bcols)
+        # pin the value self-join's partitioning on the block key (r13):
+        # the distinct-value frame is BYTES-small, so AQE coalesced the
+        # join to ONE task while its levenshtein COMPUTE is quadratic per
+        # block — 2.45 s single-task at sf0.1
+        vals = _repartition_for_compute(vals, *bcols)
     l, r = vals.alias("l"), vals.alias("r")
     vcond = F.col("l.t") <= F.col("r.t")
     for c in bcols:

@@ -178,6 +178,33 @@ def test_embedding_neardup_lsh_vs_exact(emb):
         assert len(lsh) / len(exact) > 0.1
 
 
+def test_quadratic_per_key_shuffles_are_pinned(spark, emb):
+    """The LSH Gram stage and the fuzzy value self-join sit behind keyed
+    shuffles with an explicit partition count (AQE never coalesces one),
+    ``max(defaultParallelism, spark.sql.shuffle.partitions)``: their
+    inputs are byte-small but their per-key work is quadratic."""
+    import re
+
+    from revtron_utils_spark.operators.fuzzy import fuzzy_self_pairs
+
+    n = max(
+        spark.sparkContext.defaultParallelism,
+        int(spark.conf.get("spark.sql.shuffle.partitions")),
+    )
+    names = spark.createDataFrame(
+        list(enumerate(["red widget", "rad widget", "blue widget"])), "id long, name string"
+    )
+    cases = [
+        (DD.embedding_neardup_pairs(emb, threshold=0.3, lsh_planes=2), "bucket"),
+        (fuzzy_self_pairs(names, "name", "id", [F.length("name")], max_dist=2), "_b0"),
+    ]
+    for df, key in cases:
+        df.collect()
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        pins = re.findall(rf"hashpartitioning\({key}#\d+L?, (\d+)\), REPARTITION_BY_NUM", plan)
+        assert pins and set(pins) == {str(n)}, plan
+
+
 def test_neardup_lsh_bench_recall(spark, sf_dir):
     """The benched LSH gate query (16 planes, threshold 0.4) must stay a
     subset of the exact pair set with usable recall on the real

@@ -3,6 +3,8 @@ the test session, so no new JVM starts)."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from tools import harness
@@ -14,10 +16,15 @@ def test_harness_build_and_time_modes(spark, sf_dir, capsys):
     assert "===== count_star =====" in out and "===== where_theta =====" in out
     assert "function calls" in out  # the cProfile table
 
-    harness.main(["time", "count_star,where_theta", "--sf-dir", sf_dir, "--reps", "1"])
+    harness.main(["time", "count_star,where_theta", "--sf-dir", sf_dir, "--reps", "2"])
     lines = capsys.readouterr().out.splitlines()
-    assert [ln.split(":")[0] for ln in lines] == ["count_star rep0", "where_theta rep0"]
-    assert all(ln.endswith("s") for ln in lines)
+    assert [ln.split(":")[0] for ln in lines] == [
+        "count_star rep0", "count_star rep1", "where_theta rep0", "where_theta rep1"
+    ]
+    fields = [re.fullmatch(r"\S+ rep\d: \d+\.\d\ds codegen=(\d+)", ln) for ln in lines]
+    assert all(fields), lines
+    # a repeat of the same query finds every generated class in the cache
+    assert [int(f.group(1)) for f in fields[1::2]] == [0, 0]
 
 
 def test_harness_unknown_query_name_exits_naming_it(sf_dir, capsys):

@@ -305,6 +305,49 @@ def test_dawid_skene_label_catalog_many_items_few_labels(spark):
     assert got == want
 
 
+def test_dawid_skene_null_label_is_a_vote(spark):
+    """A NULL label is a vote, in the engine and its DuckDB twin alike:
+    an item with three votes, one of them NULL, has ``n_raters = 3``, and
+    NULL can win the MAP pick like any label — on a tie too, where it
+    sorts first."""
+    import duckdb
+
+    from revtron_utils_spark.operators.annotation import (
+        dawid_skene,
+        dawid_skene_oracle_sql,
+    )
+
+    def both(votes):
+        df = spark.createDataFrame(votes, "item long, rater int, label string")
+        got = sorted(
+            tuple(r) for r in dawid_skene(df, "item", "rater", "label").collect()
+        )
+        con = duckdb.connect()
+        con.execute("CREATE TABLE votes_t (item BIGINT, rater INT, label VARCHAR)")
+        con.executemany("INSERT INTO votes_t VALUES (?, ?, ?)", votes)
+        want = sorted(
+            tuple(r)
+            for r in con.execute(
+                dawid_skene_oracle_sql(
+                    "SELECT item, rater, label FROM votes_t", "item", "rater", "label"
+                )
+            ).fetchall()
+        )
+        assert got == want
+        return {r[0]: r for r in got}
+
+    votes = [(0, 1, "a"), (0, 2, "a"), (0, 3, None)]
+    votes += [(1, 1, None), (1, 2, None), (1, 3, "b")]
+    votes += [(i, r, ["a", "b", None][(i + r) % 3]) for i in range(2, 40) for r in (1, 2, 3)]
+    by_item = both(votes)
+    assert by_item[0][3] == 3 and by_item[0][1] == "a"
+    assert by_item[1][3] == 3 and by_item[1][1] is None
+    # two symmetric raters, one 'a' and one NULL: the posteriors tie
+    # every round, and the tie goes to NULL (label ASC, NULL first)
+    tie = both([(0, 1, "a"), (0, 2, None)])
+    assert tie[0][1] is None and tie[0][3] == 2
+
+
 def test_cuped_reduces_to_group_means_when_uncorrelated(spark):
     """θ from exact moments; with a constant covariate var=0 → NULL θ;
     with a perfectly correlated covariate the adjustment removes the

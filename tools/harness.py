@@ -12,7 +12,9 @@ does (``bench.run_noop``, ``bench.release`` between passes).
 NAMES is a comma-separated list of registry queries. ``--sf-dir``
 defaults to ``$SPARK_GRAFT_SF_DIR``, as in ``bench.py``.
 
-- ``time``: wall seconds of each query, ``--reps`` passes each.
+- ``time``: wall seconds of each query, ``--reps`` passes each, and
+  ``codegen=N``, the classes Spark's code generator compiled during the
+  rep (0 when every generated class came from the codegen cache).
 - ``build``: wall seconds of the build alone (Python-side DataFrame
   construction, no action) of every registry query, slowest first; with
   ``--profile NAMES``, cProfile those query builds instead.
@@ -46,7 +48,7 @@ sys.path.insert(0, str(REPO))
 
 import __spark_entry__ as entry_mod  # noqa: E402
 from bench import HEADLINE, release, run_noop, warm_session  # noqa: E402
-from revtron_utils_spark.session import get_spark  # noqa: E402
+from revtron_utils_spark.session import codegen_compiles, get_spark  # noqa: E402
 
 CANARY = ["join_q3", "groupby_q1", "where_theta", "rollup"]
 
@@ -109,8 +111,10 @@ def main(argv: list[str] | None = None) -> None:
 def _time(spark, queries, args) -> None:
     for name in args.names:
         for i in range(args.reps):
+            c0 = codegen_compiles(spark)
             dt = run_noop(queries[name], spark, args.sf_dir)
-            print(f"{name} rep{i}: {dt:.2f}s", flush=True)
+            n = codegen_compiles(spark) - c0
+            print(f"{name} rep{i}: {dt:.2f}s codegen={n}", flush=True)
             release(spark)
 
 
