@@ -21,7 +21,8 @@ def test_harness_build_and_time_modes(spark, sf_dir, capsys):
     assert [ln.split(":")[0] for ln in lines] == [
         "count_star rep0", "count_star rep1", "where_theta rep0", "where_theta rep1"
     ]
-    fields = [re.fullmatch(r"\S+ rep\d: \d+\.\d\ds codegen=(\d+)", ln) for ln in lines]
+    line_re = r"\S+ rep\d: \d+\.\d\ds codegen=(\d+) jit=\d+\.\d\ds"
+    fields = [re.fullmatch(line_re, ln) for ln in lines]
     assert all(fields), lines
     # a repeat of the same query finds every generated class in the cache
     assert [int(f.group(1)) for f in fields[1::2]] == [0, 0]

@@ -14,7 +14,8 @@ defaults to ``$SPARK_GRAFT_SF_DIR``, as in ``bench.py``.
 
 - ``time``: wall seconds of each query, ``--reps`` passes each, and
   ``codegen=N``, the classes Spark's code generator compiled during the
-  rep (0 when every generated class came from the codegen cache).
+  rep (0 when every generated class came from the codegen cache), and
+  ``jit=X.XXs``, the JVM's JIT compile time during the rep.
 - ``build``: wall seconds of the build alone (Python-side DataFrame
   construction, no action) of every registry query, slowest first; with
   ``--profile NAMES``, cProfile those query builds instead.
@@ -48,7 +49,11 @@ sys.path.insert(0, str(REPO))
 
 import __spark_entry__ as entry_mod  # noqa: E402
 from bench import HEADLINE, release, run_noop, warm_session  # noqa: E402
-from revtron_utils_spark.session import codegen_compiles, get_spark  # noqa: E402
+from revtron_utils_spark.session import (  # noqa: E402
+    codegen_compiles,
+    get_spark,
+    jit_compile_seconds,
+)
 
 CANARY = ["join_q3", "groupby_q1", "where_theta", "rollup"]
 
@@ -111,10 +116,11 @@ def main(argv: list[str] | None = None) -> None:
 def _time(spark, queries, args) -> None:
     for name in args.names:
         for i in range(args.reps):
-            c0 = codegen_compiles(spark)
+            c0, j0 = codegen_compiles(spark), jit_compile_seconds(spark)
             dt = run_noop(queries[name], spark, args.sf_dir)
             n = codegen_compiles(spark) - c0
-            print(f"{name} rep{i}: {dt:.2f}s codegen={n}", flush=True)
+            jit = jit_compile_seconds(spark) - j0
+            print(f"{name} rep{i}: {dt:.2f}s codegen={n} jit={jit:.2f}s", flush=True)
             release(spark)
 
 
