@@ -1421,6 +1421,24 @@ def _stream_staging(tag: str) -> str:
     return tmp
 
 
+def _drain(spark, name, q):
+    """Wait for the availableNow query ``q`` to finish (stopping it and
+    raising past 600 s); returns its memory-sink table."""
+    if not q.awaitTermination(600):
+        q.stop()
+        raise RuntimeError(f"{name}: availableNow stream exceeded 600s")
+    return spark.table(q.name)
+
+
+def _drain_append(spark, name, df, table, tmp):
+    """Run the streaming frame ``df`` to completion into the append-mode
+    memory sink ``table``, checkpointing under ``tmp``."""
+    from revtron_utils_spark.streaming.runner import run_available_now
+
+    writer = df.writeStream.format("memory").queryName(table).outputMode("append")
+    return _drain(spark, name, run_available_now(writer, f"{tmp}/ck"))
+
+
 def q_streaming_sessionize(spark, sf):
     """End-to-end Structured Streaming in the driver gate: the
     applyInPandasWithState sessionizer run to completion (availableNow)
@@ -1443,10 +1461,7 @@ def q_streaming_sessionize(spark, sf):
         checkpoint_dir=f"{tmp}/ck",
         queryName="drv_stream_sessions",
     )
-    if not q.awaitTermination(600):
-        q.stop()
-        raise RuntimeError("streaming_sessionize: availableNow stream exceeded 600s")
-    return spark.table("drv_stream_sessions").select(
+    return _drain(spark, "streaming_sessionize", q).select(
         "user_id", "session_start", "session_end", "n_events"
     )
 
@@ -1481,10 +1496,7 @@ def q_streaming_heavy_hitters(spark, sf):
         checkpoint_dir=f"{tmp}/ck",
         queryName="drv_stream_hh",
     )
-    if not q.awaitTermination(600):
-        q.stop()
-        raise RuntimeError("streaming_heavy_hitters: availableNow stream exceeded 600s")
-    t = spark.table("drv_stream_hh")
+    t = _drain(spark, "streaming_heavy_hitters", q)
     # update-mode memory sink may hold one snapshot per micro-batch:
     # keep each (group, item)'s final estimate, then re-rank
     latest = t.groupBy("group", "item").agg(
@@ -1528,18 +1540,7 @@ def q_streaming_interval_join(spark, sf):
     joined = stream_interval_join(
         clicks, buys, "user_id", max_delay="1 hour", watermark="2 hours"
     ).select("user_id", "l_event_id", "r_event_id", "l_ts", "r_ts")
-    q = (
-        joined.writeStream.format("memory")
-        .queryName("drv_stream_ij")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", f"{tmp}/ck")
-        .start()
-    )
-    if not q.awaitTermination(600):
-        q.stop()
-        raise RuntimeError("streaming_interval_join: availableNow stream exceeded 600s")
-    return spark.table("drv_stream_ij")
+    return _drain_append(spark, "streaming_interval_join", joined, "drv_stream_ij", tmp)
 
 
 def q_streaming_dedup(spark, sf):
@@ -1563,20 +1564,8 @@ def q_streaming_dedup(spark, sf):
     src = f"{tmp}/src"
     planted.coalesce(1).write.mode("overwrite").parquet(src)
     stream = spark.readStream.schema(planted.schema).parquet(src)
-    q = (
-        stream_dedup(stream, ["event_id"], ts_col="ts")
-        .select("event_id")
-        .writeStream.format("memory")
-        .queryName("drv_stream_dd")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", f"{tmp}/ck")
-        .start()
-    )
-    if not q.awaitTermination(600):
-        q.stop()
-        raise RuntimeError("streaming_dedup: availableNow stream exceeded 600s")
-    return spark.table("drv_stream_dd")
+    deduped = stream_dedup(stream, ["event_id"], ts_col="ts").select("event_id")
+    return _drain_append(spark, "streaming_dedup", deduped, "drv_stream_dd", tmp)
 
 
 SQL_STREAMING_DEDUP = """
@@ -6567,9 +6556,6 @@ def q_quantile_rollup(spark, sf):
 # CDC application + snapshot reconciliation + k-core (round 6)
 # --------------------------------------------------------------------------
 
-_CDC_BASE_COLS = "o_orderkey, o_custkey, o_orderstatus, o_orderpriority"
-
-
 def _cdc_base(spark, sf):
     od = _t(spark, sf, "orders")
     return od.select(
@@ -7671,18 +7657,7 @@ def q_streaming_tumbling(spark, sf):
             "sum_cents",
         )
     )
-    q = (
-        agg.writeStream.format("memory")
-        .queryName("drv_stream_tw")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", f"{tmp}/ck")
-        .start()
-    )
-    if not q.awaitTermination(600):
-        q.stop()
-        raise RuntimeError("streaming_tumbling: availableNow stream exceeded 600s")
-    return spark.table("drv_stream_tw")
+    return _drain_append(spark, "streaming_tumbling", agg, "drv_stream_tw", tmp)
 
 
 SQL_STREAMING_TUMBLING = """
@@ -8356,18 +8331,7 @@ def q_streaming_sliding(spark, sf):
             "sum_cents",
         )
     )
-    q = (
-        agg.writeStream.format("memory")
-        .queryName("drv_stream_sw")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", f"{tmp}/ck")
-        .start()
-    )
-    if not q.awaitTermination(600):
-        q.stop()
-        raise RuntimeError("streaming_sliding: availableNow stream exceeded 600s")
-    return spark.table("drv_stream_sw")
+    return _drain_append(spark, "streaming_sliding", agg, "drv_stream_sw", tmp)
 
 
 SQL_STREAMING_SLIDING = """

@@ -78,24 +78,6 @@ def word_ngrams(col: Column | str, n: int = 3) -> Column:
     return word_ngrams_from_tokens(tokens(col), n)
 
 
-def char_ngrams(col: Column | str, n: int = 5) -> Column:
-    """Character shingles of the normalized text."""
-    # let-bind the normalized string: capturing `norm` (a regexp chain)
-    # inside the per-position lambda re-ran the regex once per shingle
-    # position — O(len²) per document (r13; the hashed_tf_embedding
-    # precedent)
-    return F.transform(
-        F.array(normalize_text(col)),
-        lambda s: F.when(
-            F.length(s) >= n,
-            F.transform(
-                F.sequence(F.lit(1), F.length(s) - (n - 1)),
-                lambda i: s.substr(i, F.lit(n)),
-            ),
-        ).otherwise(F.array().cast("array<string>")),
-    )[0]
-
-
 def stopword_ratio(col: Column | str, stopwords: list[str] | None = None) -> Column:
     toks = tokens(col)
     sw = F.array(*[F.lit(s) for s in (stopwords or STOPWORDS)])
@@ -107,12 +89,6 @@ def punct_ratio(col: Column | str) -> Column:
     c = F.col(col) if isinstance(col, str) else col
     n_punct = F.length(c) - F.length(F.regexp_replace(c, r"[^\w\s]", ""))
     return n_punct / F.greatest(F.length(c), F.lit(1))
-
-
-def uppercase_ratio(col: Column | str) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    n_upper = F.length(c) - F.length(F.regexp_replace(c, r"[A-Z]", ""))
-    return n_upper / F.greatest(F.length(c), F.lit(1))
 
 
 def quality_score(col: Column | str) -> Column:

@@ -200,54 +200,6 @@ def minhash_signature(
     )
 
 
-def minhash_signature_arrow(
-    num_hashes: int = 64, shingle_n: int = 3, seed: int = 42
-):
-    """Arrow-vectorized minhash signature UDF: per batch, shingle hashes
-    come from ``zlib.crc32`` (stable across processes) and the k
-    universal hashes are one ``(k × n_shingles)`` numpy broadcast +
-    row-min — ~20× the throughput of the interpreted higher-order
-    expression at large document counts. Products stay < 2^62 (both
-    factors < 2^31), inside int64.
-
-    Note: crc32 ≠ xxhash64, so signatures differ from
-    ``minhash_signature`` — both are valid minhash families; pick one
-    per corpus (banding compares signatures to each other only).
-    """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    params = _hash_params(num_hashes, seed)
-    A = np.array([a for a, _ in params], dtype=np.int64)[:, None]
-    B = np.array([b for _, b in params], dtype=np.int64)[:, None]
-    sentinel = [MERSENNE_P] * num_hashes
-
-    # hint-free signature (module uses `from __future__ import annotations`)
-    def sig(texts):
-        import zlib
-
-        out = []
-        for t in texts:
-            toks = (t or "").split()
-            sh = {
-                " ".join(toks[i : i + shingle_n])
-                for i in range(len(toks) - shingle_n + 1)
-            }
-            if not sh:
-                out.append(sentinel)
-                continue
-            h = np.fromiter(
-                (zlib.crc32(s.encode()) % MERSENNE_P for s in sh),
-                dtype=np.int64,
-                count=len(sh),
-            )
-            out.append(((A * h + B) % MERSENNE_P).min(axis=1).tolist())
-        return pd.Series(out)
-
-    return pandas_udf(sig, "array<long>")
-
-
 def minhash_features_arrow(num_hashes: int = 64, shingle_n: int = 3, seed: int = 42):
     """One Arrow pass producing BOTH the shingle set and the minhash
     signature (struct column) — the banding path needs the signature, the

@@ -23,7 +23,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import DecimalType, DoubleType, FloatType
 
-DEFAULT_MAX_BUCKETS = 100_000
 
 
 def require_bounded_spine(

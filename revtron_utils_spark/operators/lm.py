@@ -131,20 +131,6 @@ def _position_frame(
     )
 
 
-def _empty_scores(
-    docs: DataFrame, id_col: str, score_col: str, include_sum: bool
-) -> DataFrame:
-    """Empty result frame with the scorer's schema — the documented
-    empty-LM-corpus behavior (no vocabulary, nothing scoreable)."""
-    id_type = dict(zip(docs.schema.names, docs.schema.fields))[
-        id_col
-    ].dataType.simpleString()
-    schema = f"{id_col} {id_type}, n_tokens bigint, {score_col} double"
-    if include_sum:
-        schema += ", score_sum_int bigint"
-    return docs.sparkSession.createDataFrame([], schema)
-
-
 def ngram_lm_score(
     docs: DataFrame,
     text_col: str = "text",

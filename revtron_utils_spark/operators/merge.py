@@ -53,23 +53,34 @@ def _key_cond(keys: Sequence[str], null_safe: bool = True) -> Column:
     return reduce(lambda a, b: a & b, [eq(k) for k in keys])
 
 
-def dedupe_source(source: DataFrame, keys: Sequence[str]) -> DataFrame:
-    """Collapse duplicate-key source rows to one deterministic winner
-    (ordered by the remaining columns, last wins). A full-outer merge
-    against a source with repeated keys would otherwise MULTIPLY target
-    rows — Postgres errors with 'cannot affect row a second time'; we
-    collapse instead so replayed/overlapping batches stay idempotent."""
+def _newest_per_key(
+    source: DataFrame, keys: Sequence[str], order_col: str | None = None
+) -> DataFrame:
+    """One row per key: the largest ``order_col`` (the event time) wins,
+    ties — or every row, when ``order_col`` is None — broken by the
+    remaining columns, largest first, NULLs last. The one newest-per-key
+    window of the merges and the sync streams."""
     from pyspark.sql import Window as W
 
     keys = list(keys)
-    rest = [c for c in source.columns if c not in keys]
-    order = [F.col(c).desc_nulls_last() for c in rest] or [F.lit(1)]
+    first = [] if order_col is None else [order_col]
+    rest = [c for c in source.columns if c not in keys and c != order_col]
+    order = [F.col(c).desc_nulls_last() for c in first + rest] or [F.lit(1)]
     w = W.partitionBy(*keys).orderBy(*order)
     return (
         source.withColumn("__rvt_rn", F.row_number().over(w))
         .filter(F.col("__rvt_rn") == 1)
         .drop("__rvt_rn")
     )
+
+
+def dedupe_source(source: DataFrame, keys: Sequence[str]) -> DataFrame:
+    """Collapse duplicate-key source rows to one deterministic winner
+    (ordered by the remaining columns, last wins). A full-outer merge
+    against a source with repeated keys would otherwise MULTIPLY target
+    rows — Postgres errors with 'cannot affect row a second time'; we
+    collapse instead so replayed/overlapping batches stay idempotent."""
+    return _newest_per_key(source, keys)
 
 
 def upsert_merge(

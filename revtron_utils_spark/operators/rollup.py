@@ -24,8 +24,6 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-# summary columns maintained per (group, metric)
-_STATE = ("n", "s", "s2", "mn", "mx")
 
 
 def rollup_partial(

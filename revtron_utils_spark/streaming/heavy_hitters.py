@@ -33,6 +33,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from .runner import run_available_now
+
 STATE_SCHEMA = T.StructType(
     [
         T.StructField("items", T.ArrayType(T.StringType())),
@@ -124,12 +126,5 @@ def heavy_hitters_stream(
         "update",
         GroupStateTimeout.NoTimeout,
     )
-    writer = (
-        out.writeStream.format("memory")
-        .queryName(queryName)
-        .outputMode("update")
-        .trigger(availableNow=True)
-    )
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
+    writer = out.writeStream.format("memory").queryName(queryName).outputMode("update")
+    return run_available_now(writer, checkpoint_dir)

@@ -21,14 +21,17 @@ the batch loop, so semantics are identical and tested once.
 
 from __future__ import annotations
 
+import shutil
 from datetime import datetime, timedelta
+from pathlib import Path
 from typing import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..engine import Engine
-from ..operators.merge import dedupe_source, upsert_merge
+from ..operators.merge import _newest_per_key, upsert_merge
+from .runner import run_available_now
 
 
 def window_extract(
@@ -76,27 +79,15 @@ def merge_with_soft_delete(
     collapsed to one row per key — by ``order_col`` descending when
     given (pass the event-time column), else by ``dedupe_source``'s
     deterministic ordering — BEFORE splitting live/dead. Splitting
-    first would let a stale delete erase a newer live row."""
+    first would let a stale delete erase a newer live row. The collapse
+    is the only one: the merge below gets a key-unique frame."""
+    newest = _newest_per_key(source, keys, order_col)
     if delete_col not in source.columns:
-        return upsert_merge(target, source, keys, overwrite_with_null)
-    if order_col is not None:
-        from pyspark.sql import Window as W
-
-        w = W.partitionBy(*keys).orderBy(F.col(order_col).desc())
-        newest = (
-            source.withColumn("__rvt_rn", F.row_number().over(w))
-            .filter(F.col("__rvt_rn") == 1)
-            .drop("__rvt_rn")
-        )
-    else:
-        newest = dedupe_source(source, keys)
-    live = newest.filter(~F.coalesce(F.col(delete_col), F.lit(False))).drop(delete_col)
-    dead_keys = (
-        newest.filter(F.coalesce(F.col(delete_col), F.lit(False)))
-        .select(*keys)
-        .distinct()
-    )
-    merged = upsert_merge(target, live, keys, overwrite_with_null)
+        return upsert_merge(target, newest, keys, overwrite_with_null, dedupe=False)
+    deleted = F.coalesce(F.col(delete_col), F.lit(False))
+    live = newest.filter(~deleted).drop(delete_col)
+    dead_keys = newest.filter(deleted).select(*keys)
+    merged = upsert_merge(target, live, keys, overwrite_with_null, dedupe=False)
     return merged.join(F.broadcast(dead_keys), list(keys), "left_anti")
 
 
@@ -122,6 +113,12 @@ class IncrementalSyncer:
         self, source: DataFrame, start: datetime | str | None, end: datetime | str | None
     ) -> int:
         batch = window_extract(source, start, end, self.date_field)
+        self._merge_batch(batch)
+        return batch.count()
+
+    def _merge_batch(self, batch: DataFrame) -> None:
+        """Merge one window or one micro-batch into the target table,
+        creating it from ``batch``'s schema when missing."""
         if not self.engine.check_table_exists(self.target_table):
             self.engine.save_table(self.target_table, batch.limit(0), primary_key=self.keys)
         target = self.engine.get_table(self.target_table)
@@ -130,12 +127,22 @@ class IncrementalSyncer:
             order_col=self.date_field,
         )
         self.engine.save_table(self.target_table, merged, primary_key=self.keys)
-        return batch.count()
 
     def sync(
         self, source: DataFrame, windows: Sequence[tuple[datetime | str, datetime | str]]
     ) -> list[int]:
         return [self.sync_window(source, lo, hi) for lo, hi in windows]
+
+
+def _file_stream(spark: SparkSession, source_dir: str, schema) -> DataFrame:
+    """Parquet file source of the sync streams, at most 8 files per
+    micro-batch."""
+    return (
+        spark.readStream.format("parquet")
+        .schema(schema)
+        .option("maxFilesPerTrigger", "8")
+        .load(source_dir)
+    )
 
 
 def stream_merge(
@@ -162,33 +169,13 @@ def stream_merge(
     # the event-time column absent from the subset, grow dedup state
     # unboundedly). The keyed merge below is already idempotent; within a
     # micro-batch, duplicate keys collapse to the newest row by event
-    # time before merging.
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", "8")
-        .load(source_dir)
+    # time before merging. Each micro-batch runs the batch loop's own
+    # merge step.
+    syncer = IncrementalSyncer(engine, target_table, keys, date_field, delete_col)
+    writer = _file_stream(spark, source_dir, schema).writeStream.foreachBatch(
+        lambda batch_df, epoch_id: syncer._merge_batch(batch_df)
     )
-
-    def apply_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        from pyspark.sql import Window as W
-
-        w = W.partitionBy(*keys).orderBy(F.col(date_field).desc())
-        newest = (
-            batch_df.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
-        if not engine.check_table_exists(target_table):
-            engine.save_table(target_table, newest.limit(0), primary_key=list(keys))
-        target = engine.get_table(target_table)
-        merged = merge_with_soft_delete(target, newest, keys, delete_col or "__none__")
-        engine.save_table(target_table, merged, primary_key=list(keys))
-
-    writer = stream.writeStream.foreachBatch(apply_batch).trigger(availableNow=True)
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
+    return run_available_now(writer, checkpoint_dir)
 
 
 def stream_dedup(
@@ -212,6 +199,48 @@ def stream_dedup(
     )
 
 
+def _stream_fold(
+    spark: SparkSession,
+    source_dir: str,
+    schema,
+    state_path: str,
+    partial: Callable[[DataFrame], DataFrame],
+    merge: Callable[[DataFrame, DataFrame], DataFrame],
+    checkpoint_dir: str | None,
+):
+    """Driver of the rollup streams: each micro-batch is reduced by
+    ``partial``, folded into the parquet state at ``state_path`` by
+    ``merge(state, partial)`` and swapped in.
+
+    Batch cost is O(batch + |state|), independent of history size. The
+    state swap is last-writer-wins per micro-batch (foreachBatch is
+    at-least-once on failure; partials re-merged after a replayed batch
+    would double-count — production hardens this with a transactional
+    table format and the epoch id recorded in the state)."""
+    state = Path(state_path.rstrip("/"))
+    tmp, old = state.with_name(state.name + "__tmp"), state.with_name(state.name + "__old")
+
+    def apply_batch(batch_df: DataFrame, epoch_id: int) -> None:
+        part = partial(batch_df)
+        if state.exists():
+            part = merge(spark.read.parquet(str(state)), part)
+        part.coalesce(1).write.mode("overwrite").parquet(str(tmp))
+        # crash-safe flip: move the old state ASIDE (rename), promote the
+        # new one, then delete the old — a kill between any two steps
+        # leaves either the old or the new state directory present
+        # (rmtree-then-rename had a window that lost ALL history)
+        if old.exists():
+            shutil.rmtree(old)
+        if state.exists():
+            state.rename(old)
+        tmp.rename(state)
+        if old.exists():
+            shutil.rmtree(old)
+
+    writer = _file_stream(spark, source_dir, schema).writeStream.foreachBatch(apply_batch)
+    return run_available_now(writer, checkpoint_dir)
+
+
 def stream_rollup(
     spark: SparkSession,
     source_dir: str,
@@ -227,50 +256,15 @@ def stream_rollup(
     into a parquet-backed rollup state — the streaming form of
     ``operators.rollup.maintain_rollup``, and the scale answer to
     "keep per-group statistics current without re-reading history".
-
-    Batch cost is O(batch + |state|), independent of history size. The
-    state swap is last-writer-wins per micro-batch (foreachBatch is
-    at-least-once on failure; partials re-merged after a replayed batch
-    would double-count — production hardens this with a transactional
-    table format and the epoch id recorded in the state)."""
-    import shutil
-    from pathlib import Path
-
+    Cost and replay caveat: see :func:`_stream_fold`."""
     from ..operators.rollup import rollup_merge, rollup_partial
 
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", "8")
-        .load(source_dir)
+    return _stream_fold(
+        spark, source_dir, schema, state_path,
+        lambda df: rollup_partial(df, group_cols, value_col),
+        lambda state, part: rollup_merge(state, part, group_cols),
+        checkpoint_dir,
     )
-
-    def apply_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        part = rollup_partial(batch_df, group_cols, value_col)
-        if Path(state_path).exists():
-            state = spark.read.parquet(state_path)
-            merged = rollup_merge(state, part, group_cols)
-        else:
-            merged = part
-        tmp = state_path.rstrip("/") + "__tmp"
-        merged.coalesce(1).write.mode("overwrite").parquet(tmp)
-        # crash-safe flip: move the old state ASIDE (rename), promote the
-        # new one, then delete the old — a kill between any two steps
-        # leaves either the old or the new state directory present
-        # (rmtree-then-rename had a window that lost ALL history)
-        old = state_path.rstrip("/") + "__old"
-        if Path(old).exists():
-            shutil.rmtree(old)
-        if Path(state_path).exists():
-            Path(state_path).rename(old)
-        Path(tmp).rename(state_path)
-        if Path(old).exists():
-            shutil.rmtree(old)
-
-    writer = stream.writeStream.foreachBatch(apply_batch).trigger(availableNow=True)
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
 
 
 def stream_quantile_rollup(
@@ -290,40 +284,14 @@ def stream_quantile_rollup(
     latency quantiles over an unbounded event stream". Same
     crash-safe state flip and at-least-once caveat as
     :func:`stream_rollup`."""
-    import shutil
-    from pathlib import Path
-
     from ..operators.rollup import quantile_rollup_merge, quantile_rollup_partial
 
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", "8")
-        .load(source_dir)
+    return _stream_fold(
+        spark, source_dir, schema, state_path,
+        lambda df: quantile_rollup_partial(df, group_cols, value_col, bins_per_efold),
+        lambda state, part: quantile_rollup_merge(state, part, group_cols),
+        checkpoint_dir,
     )
-
-    def apply_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        part = quantile_rollup_partial(batch_df, group_cols, value_col, bins_per_efold)
-        if Path(state_path).exists():
-            state = spark.read.parquet(state_path)
-            merged = quantile_rollup_merge(state, part, group_cols)
-        else:
-            merged = part
-        tmp = state_path.rstrip("/") + "__tmp"
-        merged.coalesce(1).write.mode("overwrite").parquet(tmp)
-        old = state_path.rstrip("/") + "__old"
-        if Path(old).exists():
-            shutil.rmtree(old)
-        if Path(state_path).exists():
-            Path(state_path).rename(old)
-        Path(tmp).rename(state_path)
-        if Path(old).exists():
-            shutil.rmtree(old)
-
-    writer = stream.writeStream.foreachBatch(apply_batch).trigger(availableNow=True)
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
 
 
 def stream_merge_versioned(
@@ -342,25 +310,9 @@ def stream_merge_versioned(
     cannot give), and the version history doubles as a sync audit log.
     Replayed batches re-merge idempotently (ST4); a racing writer
     surfaces as ``CommitConflict`` rather than silent clobber."""
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", "8")
-        .load(source_dir)
-    )
-
-    def apply_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        from pyspark.sql import Window as W
-
-        w = W.partitionBy(*keys).orderBy(F.col(date_field).desc())
-        newest = (
-            batch_df.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
+    writer = _file_stream(spark, source_dir, schema).writeStream.foreachBatch(
+        lambda batch_df, epoch_id: table._merge(
+            _newest_per_key(batch_df, keys, date_field), list(keys)
         )
-        table.merge(newest, list(keys))
-
-    writer = stream.writeStream.foreachBatch(apply_batch).trigger(availableNow=True)
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
+    )
+    return run_available_now(writer, checkpoint_dir)

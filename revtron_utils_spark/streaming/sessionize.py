@@ -25,6 +25,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from .runner import run_available_now
+
 SESSION_SCHEMA = T.StructType(
     [
         T.StructField("user_id", T.LongType(), False),
@@ -126,15 +128,8 @@ def sessionize_stream(
         "append",
         GroupStateTimeout.EventTimeTimeout,
     )
-    writer = (
-        sessions.writeStream.format("memory")
-        .queryName(queryName)
-        .outputMode("append")
-        .trigger(availableNow=True)
-    )
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
+    writer = sessions.writeStream.format("memory").queryName(queryName).outputMode("append")
+    return run_available_now(writer, checkpoint_dir)
 
 
 def sessionize_batch(df: DataFrame, gap_minutes: int = 30) -> DataFrame:

@@ -239,6 +239,18 @@ class VersionedTable:
         actions, and a source that evaluated differently between them —
         ``rand()``, fresh ``sample()`` — could materialize keys in files
         that pruning classified as disjoint, committing duplicates."""
+        return self._merge(source, keys, overwrite_with_null, observation, dedupe=True)
+
+    def _merge(
+        self,
+        source: DataFrame,
+        keys: Sequence[str],
+        overwrite_with_null: bool = False,
+        observation: Observation | None = None,
+        dedupe: bool = False,
+    ) -> int:
+        """:meth:`merge`; ``dedupe=False`` is for a source already
+        collapsed to one row per key (see ``upsert_merge``)."""
         import pyspark.sql.functions as F
 
         base = self.latest_version()
@@ -287,6 +299,7 @@ class VersionedTable:
                 source,
                 keys,
                 overwrite_with_null=overwrite_with_null,
+                dedupe=dedupe,
                 returning=observation is not None,
             )
             if observation is not None:

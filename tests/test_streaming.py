@@ -596,3 +596,110 @@ def test_streaming_sliding_equals_batch_and_doubles_membership(spark, sf_dir):
            <= mx - 3_600_000_000)
     ).count()
     assert total_streamed == 2 * emitted_events + boundary_events
+
+
+def _windows(df) -> int:
+    """Window operators in ``df``'s optimized logical plan."""
+    import re
+
+    return len(re.findall(r"\bWindow \[", df._jdf.queryExecution().optimizedPlan().toString()))
+
+
+_SYNC_SCHEMA = "k long, v long, ts timestamp, IsDeleted boolean"
+
+
+def _sync_rows(spark, rows):
+    from datetime import datetime
+
+    return spark.createDataFrame(
+        [(k, v, datetime.fromisoformat(ts), d) for k, v, ts, d in rows], _SYNC_SCHEMA
+    )
+
+
+def test_sync_without_delete_col_keeps_newest_event(engine, spark):
+    """Without a delete column the window merge must still collapse a
+    key's duplicates by event time, not by the largest value."""
+    engine.save_table(
+        "nodel", _sync_rows(spark, [(1, 0, "2024-01-01", False)]).drop("IsDeleted"),
+        primary_key=["k"],
+    )
+    batch = _sync_rows(
+        spark, [(1, 9, "2024-01-02", False), (1, 1, "2024-01-03", False)]
+    ).drop("IsDeleted")
+    IncrementalSyncer(engine, "nodel", keys=["k"], date_field="ts").sync_window(
+        batch, None, None
+    )
+    assert [(r.k, r.v) for r in engine.get_table("nodel").collect()] == [(1, 1)]
+
+
+def test_merge_plans_collapse_each_batch_once(engine, spark, tmp_path, monkeypatch):
+    """One newest-per-key window per branch: the live and dead-key
+    branches each read it (2), the no-delete-column path of the window
+    sync reads it once (1), and a stream_merge micro-batch plans the
+    same merge."""
+    target = _sync_rows(spark, [(1, 0, "2024-01-01", False)])
+    batch = _sync_rows(spark, [(1, 9, "2024-01-02", False), (2, 1, "2024-01-03", True)])
+    assert _windows(merge_with_soft_delete(target, batch, ["k"], order_col="ts")) <= 2
+    no_del = merge_with_soft_delete(
+        target.drop("IsDeleted"), batch.drop("IsDeleted"), ["k"], order_col="ts"
+    )
+    assert _windows(no_del) == 1
+
+    saved = []
+    save = engine.save_table
+
+    def spy(name, df, **kw):
+        saved.append(_windows(df))
+        save(name, df, **kw)
+
+    monkeypatch.setattr(engine, "save_table", spy)
+    src = str(tmp_path / "plan_src")
+    batch.coalesce(1).write.parquet(src)
+    q = stream_merge(
+        spark, src, batch.schema, engine, "plan_target", keys=["k"], date_field="ts",
+        delete_col="IsDeleted", checkpoint_dir=str(tmp_path / "plan_ck"),
+    )
+    assert q.awaitTermination(120)
+    assert saved and 1 <= max(saved) <= 2, saved
+
+
+@pytest.mark.parametrize("delete_col", [None, "IsDeleted"])
+def test_stream_merge_matches_sync_window(engine, spark, tmp_path, delete_col):
+    """The module's claim: a stream_merge micro-batch and a sync window
+    apply the same merge. One batch with duplicate keys (the newer
+    event carries the smaller value), a delete followed by a later
+    re-insert, a plain delete and an insert."""
+    seed = _sync_rows(
+        spark,
+        [(1, 0, "2024-01-01", False), (2, 0, "2024-01-01", False), (3, 0, "2024-01-01", False)],
+    )
+    batch = _sync_rows(
+        spark,
+        [
+            (1, 7, "2024-01-02", False),
+            (1, 5, "2024-01-03", False),
+            (2, 0, "2024-01-02", True),
+            (2, 8, "2024-01-04", False),
+            (3, 0, "2024-01-05", True),
+            (4, 4, "2024-01-01", False),
+        ],
+    )
+    for t in ("par_stream", "par_batch"):
+        engine.save_table(t, seed, primary_key=["k"])
+    src = str(tmp_path / "par_src")
+    batch.coalesce(1).write.parquet(src)
+    q = stream_merge(
+        spark, src, batch.schema, engine, "par_stream", keys=["k"], date_field="ts",
+        delete_col=delete_col, checkpoint_dir=str(tmp_path / "par_ck"),
+    )
+    assert q.awaitTermination(120)
+    IncrementalSyncer(
+        engine, "par_batch", keys=["k"], date_field="ts", delete_col=delete_col
+    ).sync_window(batch, None, None)
+
+    def rows(t):
+        return sorted(tuple(r) for r in engine.get_table(t).select("k", "v").collect())
+
+    assert rows("par_stream") == rows("par_batch")
+    want = {1: 5, 2: 8, 4: 4} if delete_col else {1: 5, 2: 8, 3: 0, 4: 4}
+    assert dict(rows("par_batch")) == want
