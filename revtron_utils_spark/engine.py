@@ -8,7 +8,8 @@ introspection / execute_raw), executed by Spark instead of Postgres:
   of kwargs → SQLAlchemy → SQL text → Postgres.
 * Tables are named Parquet datasets: **attached** (external read-only
   paths, e.g. the test fixtures) or **managed** (warehouse directory the
-  mutation suite writes to, versioned-dir swap for crash safety).
+  mutation suite writes to; ``io.replace_parquet``'s symlink flip, or a
+  manifest commit in versioned mode, for crash safety).
 * Spark has no enforced primary keys, so the PK registry replaces
   reflection-discovered PKs; ``upsert`` raises without one, mirroring
   ``main.py:97-99``.
@@ -21,8 +22,6 @@ for Delta/Iceberg MERGE and keep the same expression generator.
 
 from __future__ import annotations
 
-import shutil
-import uuid
 from dataclasses import dataclass, field
 from pathlib import Path
 from typing import Any, Sequence
@@ -33,7 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .dsl import Where, compile_where
-from .io import read_parquet
+from .io import read_parquet, replace_parquet
 from .operators.merge import (
     MergeKeyError,
     delete_where,
@@ -591,13 +590,11 @@ class Engine:
         return self.spark.createDataFrame(rows, schema=schema)
 
     def _write_managed(self, table_name: str, df: DataFrame) -> None:
-        """Versioned-dir swap: write the new table image next to the old
-        one, then flip the ``current`` symlink-style directory. Not a real
+        """Publish the new table image: a manifest commit in versioned
+        mode, else ``io.replace_parquet`` onto ``current``. Not a real
         transaction log (that's Delta/Iceberg territory) but safe against
         partial writes and read-while-write on local FS."""
         self._require_warehouse()
-        import os
-
         base = Path(self.warehouse_dir) / table_name
         # index hint: cluster rows on the indexed columns so parquet
         # row-group min/max stats prune point/range scans (see
@@ -613,27 +610,9 @@ class Engine:
                 vt.overwrite(df)
             else:
                 VersionedTable.create(self.spark, str(base), df)
-            self._catalog_version += 1
-            return
-        base.mkdir(parents=True, exist_ok=True)
-        tmp = base / f"v_{uuid.uuid4().hex[:12]}"
-        df.write.mode("overwrite").parquet(str(tmp))
-        current = base / "current"
-        old_target = None
-        if current.is_symlink():
-            old_target = current.resolve()
-        elif current.exists():  # pre-symlink layout migration
-            old_target = base / f"gone_{uuid.uuid4().hex[:6]}"
-            current.rename(old_target)
-        # atomic flip: build the new symlink under a temp name, then
-        # os.replace over 'current' — a crash leaves either the old or
-        # the new pointer, never a missing one
-        link_tmp = base / f".current_{uuid.uuid4().hex[:6]}"
-        link_tmp.symlink_to(tmp.name)
-        os.replace(link_tmp, current)
-        if old_target and old_target.exists():
-            shutil.rmtree(old_target, ignore_errors=True)
-        # any temp views registered over the old version dir are stale now
+        else:
+            replace_parquet(df, base / "current")
+        # any temp views registered over the old image are stale now
         self._catalog_version += 1
 
     def vacuum_table(self, table_name: str, keep_last: int = 2) -> list[str]:

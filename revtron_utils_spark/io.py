@@ -1,4 +1,5 @@
-"""Parquet table reading with nanosecond-timestamp compatibility.
+"""Parquet I/O: reads with nanosecond-timestamp compatibility, and
+``replace_parquet``, the one crash-safe way to replace a dataset.
 
 Spark's vectorized parquet reader rejects ``TIMESTAMP(NANOS)`` columns
 (PARQUET_TYPE_ILLEGAL) — the fixture table ``events`` stores ``ts`` as
@@ -13,9 +14,12 @@ time; pushdown on other columns is unaffected.
 from __future__ import annotations
 
 import os
+import shutil
 import stat
+import uuid
 from collections import OrderedDict
 from functools import lru_cache
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -136,3 +140,34 @@ def _read_parquet_uncached(spark: SparkSession, path: str) -> DataFrame:
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one fixture table (``{sf_dir}/{name}.parquet``)."""
     return read_parquet(spark, f"{sf_dir}/{name}.parquet")
+
+
+def replace_parquet(df: DataFrame, path: str | os.PathLike) -> None:
+    """Publish ``df`` as the parquet dataset at ``path``, safe against
+    partial writes and read-while-write on local FS: write a hidden
+    sibling ``.<name>.v_<hex>`` (readers of the parent skip it), flip a
+    relative symlink to it over ``path`` with ``os.replace``, then delete
+    the old image if it is a sibling. A crash leaves the old image or the
+    new; an exception leaves ``path`` as it was. A real directory at
+    ``path`` is moved aside to a hidden sibling just before its first
+    flip (a kill between those two renames leaves it only there)."""
+    path = Path(path)
+    new, link, moved = (
+        path.with_name(f".{path.name}.{k}_{uuid.uuid4().hex[:12]}") for k in ("v", "link", "v")
+    )
+    try:
+        df.write.parquet(str(new))
+        old = path.resolve() if path.is_symlink() else None
+        if old is None and path.exists():
+            path.rename(moved)
+            old = moved
+        link.symlink_to(new.name)
+        os.replace(link, path)
+    except BaseException:
+        link.unlink(missing_ok=True)
+        if moved.exists():
+            moved.rename(path)
+        shutil.rmtree(new, ignore_errors=True)
+        raise
+    if old is not None and old.resolve().parent == path.parent.resolve():
+        shutil.rmtree(old, ignore_errors=True)

@@ -22,6 +22,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .io import read_parquet, replace_parquet
+
 
 def write_bucketed(
     df: DataFrame,
@@ -186,22 +188,17 @@ def compact(
     of KB-sized incremental outputs destroy scan throughput and NameNode
     /listing behavior at scale). Returns the new file count.
 
-    Non-transactional (same caveat as the managed-table mutations):
-    readers racing the rewrite see a partial directory; on a real lake
-    use a table format's REPLACE/OPTIMIZE instead."""
-    df = spark.read.parquet(path)
+    Read through ``io.read_parquet`` (timestamp[ns] columns come back as
+    microseconds, as on every engine read) and published with
+    ``io.replace_parquet``: readers racing the rewrite, or a crash
+    during it, see the old image or the new one, never a partial one."""
+    df = read_parquet(spark, path)
     n = df.count()
     files = max(1, -(-n // target_rows_per_file))
     out = df.repartition(files)
     if sort_cols:
         out = out.sortWithinPartitions(*sort_cols)
-    tmp = path.rstrip("/") + "__compact_tmp"
-    out.write.mode("overwrite").parquet(tmp)
-    import shutil
-    from pathlib import Path as P
-
-    shutil.rmtree(path)
-    P(tmp).rename(path)
+    replace_parquet(out, path.rstrip("/"))
     return files
 
 

@@ -29,7 +29,6 @@ from .rest import (
 )
 
 DATETIME_FORMAT = "%Y-%m-%dT%H:%M:%S.%f+0000"  # main.py:11
-DATE_FORMAT = "%Y-%m-%d"  # main.py:12
 
 
 def _fmt_value(value: Any) -> str:

@@ -21,7 +21,6 @@ the batch loop, so semantics are identical and tested once.
 
 from __future__ import annotations
 
-import shutil
 from datetime import datetime, timedelta
 from pathlib import Path
 from typing import Callable, Sequence
@@ -30,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..engine import Engine
+from ..io import replace_parquet
 from ..operators.merge import _newest_per_key, upsert_merge
 from .runner import run_available_now
 
@@ -210,7 +210,8 @@ def _stream_fold(
 ):
     """Driver of the rollup streams: each micro-batch is reduced by
     ``partial``, folded into the parquet state at ``state_path`` by
-    ``merge(state, partial)`` and swapped in.
+    ``merge(state, partial)`` and published with ``io.replace_parquet``
+    (a kill at any point leaves the old or the new state readable).
 
     Batch cost is O(batch + |state|), independent of history size. The
     state swap is last-writer-wins per micro-batch (foreachBatch is
@@ -218,24 +219,12 @@ def _stream_fold(
     would double-count — production hardens this with a transactional
     table format and the epoch id recorded in the state)."""
     state = Path(state_path.rstrip("/"))
-    tmp, old = state.with_name(state.name + "__tmp"), state.with_name(state.name + "__old")
 
     def apply_batch(batch_df: DataFrame, epoch_id: int) -> None:
         part = partial(batch_df)
         if state.exists():
             part = merge(spark.read.parquet(str(state)), part)
-        part.coalesce(1).write.mode("overwrite").parquet(str(tmp))
-        # crash-safe flip: move the old state ASIDE (rename), promote the
-        # new one, then delete the old — a kill between any two steps
-        # leaves either the old or the new state directory present
-        # (rmtree-then-rename had a window that lost ALL history)
-        if old.exists():
-            shutil.rmtree(old)
-        if state.exists():
-            state.rename(old)
-        tmp.rename(state)
-        if old.exists():
-            shutil.rmtree(old)
+        replace_parquet(part.coalesce(1), state)
 
     writer = _file_stream(spark, source_dir, schema).writeStream.foreachBatch(apply_batch)
     return run_available_now(writer, checkpoint_dir)
@@ -248,7 +237,6 @@ def stream_rollup(
     state_path: str,
     group_cols: list[str],
     value_col: str,
-    date_field: str = "ts",
     checkpoint_dir: str | None = None,
 ):
     """Streaming incremental aggregate maintenance: each micro-batch is
@@ -282,7 +270,7 @@ def stream_quantile_rollup(
     ``operators.rollup.quantile_rollup_*`` — p50/p99 stay current
     without ever re-reading history, the streaming answer to "track
     latency quantiles over an unbounded event stream". Same
-    crash-safe state flip and at-least-once caveat as
+    crash-safe state swap and at-least-once caveat as
     :func:`stream_rollup`."""
     from ..operators.rollup import quantile_rollup_merge, quantile_rollup_partial
 
