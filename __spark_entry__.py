@@ -10445,7 +10445,9 @@ def q_cochran_q(spark, sf):
     all-integer G/L sums, one pinned division."""
     from revtron_utils_spark.operators.profile import cochran_q
 
-    docs = _t(spark, sf, "documents")
+    # guarded spread at the scan, so the lang-ID regexes below run on
+    # every core of a one-split table
+    docs = DD._spread_if_narrow(_t(spark, sf, "documents"))
     flat = docs.select(
         F.col("doc_id"),
         F.explode(

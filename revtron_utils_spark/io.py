@@ -18,14 +18,12 @@ import shutil
 import stat
 import uuid
 from collections import OrderedDict
-from functools import lru_cache
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-@lru_cache(maxsize=1024)
 def _nanos_columns(path: str) -> tuple[str, ...]:
     try:
         import pyarrow.parquet as pq

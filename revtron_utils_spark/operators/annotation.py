@@ -1025,9 +1025,9 @@ def cronbach_alpha(
     fold is one row wide, like every bounded-catalog fold in the repo.
     """
     from .dedup import _persist
-    from .guards import check_sum_sq_width, integral_long, require_bounded_spine
+    from .guards import check_sum_sq_width, integral_long, require_bounded_spines
 
-    df = require_bounded_spine(df, item_col, [], max_items, "cronbach_alpha")
+    df = require_bounded_spines(df, [(item_col, max_items, item_col)], "cronbach_alpha")
     dec = lambda c: c.cast("decimal(38,0)")
     v = integral_long(df, value_col, "cronbach_alpha")
     base = df.select(
@@ -1222,7 +1222,7 @@ def krippendorff_alpha(
     ≤max_panel-row fold; the category margin is a second small agg over
     the same cells. Nothing collects a unit's ratings anywhere.
     """
-    from .guards import require_bounded_spine
+    from .guards import require_bounded_spines
 
     dec = lambda c: c.cast("decimal(38,0)")
     cells = (
@@ -1244,7 +1244,9 @@ def krippendorff_alpha(
         "_m",
         (dec(F.col("_m")) * dec(F.col("_m")) - F.col("_sq")).alias("_dis"),
     )
-    usable = require_bounded_spine(usable, "_m", [], max_panel, "krippendorff_alpha")
+    usable = require_bounded_spines(
+        usable, [("_m", max_panel, "_m")], "krippendorff_alpha"
+    )
     # dropped-unit count rides IN-PLAN as a 1-row broadcast (r13): the
     # old build ran a dedicated count() job for a literal output column
     drop_cnt = units.agg(

@@ -375,9 +375,11 @@ def mantel_haenszel(
     one division. Output one row: ``(n_strata, n, or_crude, or_mh)`` —
     NULL ORs when a denominator is 0.
     """
-    from .guards import require_bounded_spine
+    from .guards import require_bounded_spines
 
-    df = require_bounded_spine(df, stratum_col, [], max_strata, "mantel_haenszel")
+    df = require_bounded_spines(
+        df, [(stratum_col, max_strata, stratum_col)], "mantel_haenszel"
+    )
     dec = lambda c: c.cast("decimal(38,0)")
     t = F.col(treat_col).cast("int")
     o = F.col(outcome_col).cast("int")

@@ -115,9 +115,9 @@ def bpe_train(
     Deterministic: ties in pair frequency break on (left, right)
     lexicographic order. Stops early when no pair reaches
     ``min_pair_count``."""
-    spark = df.sparkSession
-    if checkpoint_dir is not None:
-        spark.sparkContext.setCheckpointDir(checkpoint_dir)
+    from .graph import _lineage_cutter
+
+    _cut = _lineage_cutter(df.sparkSession, checkpoint_dir)
     vocab = word_frequencies(df, text_col, lowercase).withColumn(
         "sym", _word_symbols(F.col("word"))
     ).select("sym", "wcount")
@@ -153,11 +153,8 @@ def bpe_train(
                 _merge_fold(F.col("sym"), left, right).alias("sym"), "wcount"
             )
             if (round_no + 1) % checkpoint_every == 0:
-                # cut the per-round fold lineage; reliable checkpoint on
-                # a cluster survives executor loss mid-training
-                vocab = (
-                    vocab.checkpoint() if checkpoint_dir else vocab.localCheckpoint()
-                )
+                # cut the per-round fold lineage
+                vocab = _cut(vocab)
             vocab = vocab.persist()
     finally:
         vocab.unpersist()

@@ -1468,12 +1468,11 @@ def embedding_neardup_pairs(
                 for _ in range(lsh_planes * lsh_bands)
             ]
         keys_udf = _hyperplane_band_keys(planes_i, lsh_planes, lsh_bands)
-        # spread the corpus BEFORE the band-keys UDF: a small corpus is
-        # one parquet file -> one partition, and the signature matmul ran
-        # single-threaded (r12 profile: 4.5 s 1-task stage per join side
-        # at sf0.1)
-        par0 = df.sparkSession.sparkContext.defaultParallelism
-        base = base.filter(F.col("q").isNotNull()).repartition(par0)
+        # spread a narrow corpus BEFORE the band-keys UDF: a small corpus
+        # is one parquet file -> one partition, and the signature matmul
+        # ran single-threaded (r12 profile: 4.5 s 1-task stage per join
+        # side at sf0.1)
+        base = _spread_if_narrow(base.filter(F.col("q").isNotNull()))
         if lsh_bands == 1:
             base = base.withColumn("bucket", keys_udf(F.col("q"))[0])
             extra_key = ["bucket"]
@@ -1580,8 +1579,7 @@ def embedding_neardup_pairs(
     # small corpora arrive as one parquet file → one partition → a
     # 1-task nested-loop join. Spread the streamed side across the
     # cluster; the pair count (not the row count) is the real work.
-    par = df.sparkSession.sparkContext.defaultParallelism
-    l, r = base.repartition(par).alias("l"), base.alias("r")
+    l, r = _spread_if_narrow(base).alias("l"), base.alias("r")
     cond = F.col("l.id") < F.col("r.id")
     for c in list(block_cols) + extra_key:
         cond = cond & (F.col(f"l.{c}") == F.col(f"r.{c}"))

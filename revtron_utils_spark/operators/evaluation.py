@@ -561,16 +561,18 @@ def gain_curve(
     cum_share is the population fraction scanned and cum_capture the
     positive fraction captured (NULL when the group has no
     positives). The bounded-histogram contract is enforced by
-    ``guards.require_bounded_spine`` (fail fast instead of
+    ``guards.require_bounded_spines`` (fail fast instead of
     single-task-sorting raw float scores; ``max_buckets=None``
     vouches).
     """
     from pyspark.sql import Window
 
-    from .guards import require_bounded_spine
+    from .guards import require_bounded_spines
 
     keys = list(by or [])
-    df = require_bounded_spine(df, score_col, keys, max_buckets, "gain_curve")
+    df = require_bounded_spines(
+        df, [(score_col, max_buckets, score_col)], "gain_curve", by=keys
+    )
     per = df.groupBy(*keys, F.col(score_col).alias("score")).agg(
         F.count(F.lit(1)).alias("n_at"),
         F.sum(F.col(label_col).cast("long")).alias("pos_at"),

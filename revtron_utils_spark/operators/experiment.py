@@ -391,15 +391,15 @@ def bh_fdr(
     contract of complete-case testing).
 
     The family is a bounded spine by contract
-    (``guards.require_bounded_spine`` on ``test_col``; a family of 10⁶⁺
+    (``guards.require_bounded_spines`` on ``test_col``; a family of 10⁶⁺
     tests is a modeling smell, not a scale feature). Output one row
     per test: ``(test, p_value, rank, m, rejected)``.
     """
     from pyspark.sql import Window
 
-    from .guards import require_bounded_spine
+    from .guards import require_bounded_spines
 
-    df = require_bounded_spine(df, test_col, [], max_tests, "bh_fdr")
+    df = require_bounded_spines(df, [(test_col, max_tests, test_col)], "bh_fdr")
     base = df.select(
         F.col(test_col).alias("test"), F.col(p_col).cast("double").alias("p_value")
     )
@@ -576,15 +576,15 @@ def propensity_strata_effect(
     array (cross-row float sums are order-dependent — the ewma/
     fmix precedent), then ONE division by N_valid — the oracle folds
     the identical list in the identical _q order. Strata are a
-    bounded spine by contract (``guards.require_bounded_spine``;
+    bounded spine by contract (``guards.require_bounded_spines``;
     propensity bucketing is quantile-grid-sized by construction).
     Output one row: ``(n_total, n_valid, n_strata_valid, att_effect,
     coverage)``.
     """
-    from .guards import require_bounded_spine
+    from .guards import require_bounded_spines
 
-    df = require_bounded_spine(
-        df, stratum_col, [], max_strata, "propensity_strata_effect"
+    df = require_bounded_spines(
+        df, [(stratum_col, max_strata, stratum_col)], "propensity_strata_effect"
     )
     t = F.col(treat_col).cast("int")
     v = F.col(value_col).cast("long")
@@ -1118,9 +1118,9 @@ def srm_check(
     readout); NULL χ² when n = 0 or k < 2. One map-side-combined
     aggregation; the arm catalog is bounded (``max_arms``).
     """
-    from .guards import require_bounded_spine
+    from .guards import require_bounded_spines
 
-    df = require_bounded_spine(df, arm_col, [], max_arms, "srm_check")
+    df = require_bounded_spines(df, [(arm_col, max_arms, arm_col)], "srm_check")
     dec = lambda c: c.cast("decimal(38,0)")
     arms = df.groupBy(F.col(arm_col).alias("_a")).agg(
         F.count(F.lit(1)).alias("_o")

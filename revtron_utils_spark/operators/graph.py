@@ -1153,7 +1153,6 @@ def hits(
     e = _cut(
         edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct()
     )
-    e.persist()
     n_edges = e.count()
     nodes = (
         e.select(F.col("src").alias("node"))
@@ -1242,7 +1241,6 @@ def hits(
         )
         hubs = _cut(_renorm(h_all, "hub_int"))
         h_all.unpersist()
-    e.unpersist()
     nodes.unpersist()
     return hubs.join(auths, "node").select("node", "hub_int", "auth_int")
 
@@ -1403,15 +1401,11 @@ def harmonic_centrality_sampled(
     # canonical pairs shuffles |E| rows; the old symmetrize-then-distinct
     # shuffled 2|E| for the identical undirected edge set (guide §2.3 —
     # shuffle fewer bytes). The both-directions union afterwards is a
-    # narrow op over the persisted canonical set.
-    canon = _persist(
-        _cut(
-            raw.where(F.col("u") != F.col("v"))
-            .select(
-                F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v")
-            )
-            .distinct()
-        )
+    # narrow op over the checkpointed canonical set.
+    canon = _cut(
+        raw.where(F.col("u") != F.col("v"))
+        .select(F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v"))
+        .distinct()
     )
     e = canon.unionByName(
         canon.select(F.col("v").alias("u"), F.col("u").alias("v"))
@@ -1446,7 +1440,7 @@ def harmonic_centrality_sampled(
                 "left_anti",
             )
         )
-        frontier = _cut(_persist(nxt), eager=False)
+        frontier = _cut(nxt, eager=False)
         dist = dist.unionByName(frontier)
     # 12/d is exact for d in 1..4; d=0 (pivot itself) contributes 0
     contrib = F.when(F.col("d") > 0, F.expr("12 div d")).otherwise(F.lit(0))
@@ -1662,7 +1656,7 @@ def modularity(
     # persisted for the same reason: read by the fail-fast count action
     # here and again by the returned per-community aggregate
     labeled = _persist(deg.join(cm, "_n", "left"))
-    # fail-fast on unlabeled nodes, IN-PLAN (the require_bounded_spine
+    # fail-fast on unlabeled nodes, IN-PLAN (the require_bounded_spines
     # r12 convention): the eager ``.count()`` here was a full action at
     # query-build time — inside community_quality it materialized the
     # whole label-propagation loop before the query ran. The check now

@@ -1,16 +1,15 @@
-"""Bounded-spine contract enforcement.
+"""Contract guards: bounded spines, sum-of-squares width, integral casts.
 
 Several fold/window operators (`profile.ks_test`, `evaluation.
-gain_curve`, `timeseries.ewma`/`holt_linear`, `survival.kaplan_meier`)
+gain_curve`, `timeseries.ewma`/`holt_linear`, the rank-test family)
 deliberately run an unpartitioned window or an O(T²) array fold over a
 spine the CALLER promises is bounded (pre-bucketed times, score
-histograms). The contract was previously documentation-only: a careless
-caller passing a raw high-cardinality column (microsecond timestamps,
-unbinned float scores) got a single-task sort or a multi-GB
-collect_list row instead of an error. These helpers make the contract
-fail fast: one cheap ``approx_count_distinct`` pre-aggregation (partial
-map-side combine, one tiny action) estimates the worst per-group spine
-cardinality and raises before the expensive stage is ever scheduled.
+histograms). A caller passing a raw high-cardinality column
+(microsecond timestamps, unbinned float scores) would get a single-task
+sort or a multi-GB collect_list row. :func:`require_bounded_spines`
+turns that into an error: one cheap ``approx_count_distinct``
+aggregate (partial map-side combine) inside the query's own plan
+estimates the spine cardinality and raises when the query executes.
 
 The estimate carries HLL++ error (~2-5% at the default rsd), so the cap
 is a posture guard, not an exact limit — callers running a legitimately
@@ -24,104 +23,48 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import DecimalType, DoubleType, FloatType
 
 
-
-def require_bounded_spine(
-    df: DataFrame,
-    spine_col: str,
-    by: list[str],
-    max_buckets: int | None,
-    op_name: str,
-    check_df: DataFrame | None = None,
-) -> DataFrame:
-    """Gate ``df`` on the bounded-spine contract: the returned frame is
-    row-identical to ``df`` but RAISES AT EXECUTION when the
-    (approximate) number of distinct ``spine_col`` values in the worst
-    ``by`` group exceeds ``max_buckets``. ``max_buckets=None`` returns
-    ``df`` unchanged (zero extra work — the caller vouches).
-
-    r12 optimization: this used to run an eager two-level aggregate +
-    ``first()`` — one full Spark ACTION per guard call at query-build
-    time (~0.3–1.2 s each at sf0.1, and the stats family pays 1–3
-    guards per query). The check now rides inside the main plan as a
-    1-row broadcast whose projection ``raise_error``s on violation —
-    the ``integral_long`` zero-extra-action convention. Same contract
-    and message; the error surfaces when the query executes (normal
-    lazy-engine timing) instead of when the operator is called.
-    """
-    if max_buckets is None:
-        return df
-    scope = f"per {by} group" if by else "overall"
-    # check_df lets a caller count a DERIVED frame (e.g. a joint-cell
-    # projection) while attaching the gate to the frame that flows on
-    src = check_df if check_df is not None else df
-    mx = (
-        src.groupBy(*by)
-        .agg(F.approx_count_distinct(spine_col).alias("_nb"))
-        .agg(F.coalesce(F.max("_nb"), F.lit(0)).alias("_mx"))
-    )
-    gate = mx.select(
-        F.when(
-            F.col("_mx") > max_buckets,
-            F.raise_error(
-                F.concat(
-                    F.lit(f"{op_name}: spine column {spine_col!r} has ~"),
-                    F.col("_mx").cast("string"),
-                    F.lit(
-                        f" distinct values {scope}, over max_buckets="
-                        f"{max_buckets}. This operator's contract is a "
-                        "CALLER-BOUNDED spine (it sorts or folds the whole "
-                        "spine in one task/row) — pre-bucket the column "
-                        "(e.g. floor timestamps to days, bin scores), or "
-                        "raise/disable max_buckets to vouch for the bound."
-                    ),
-                )
-            ),
-        )
-        .otherwise(F.lit(1))
-        .alias("_spine_gate")
-    )
-    # the join CONDITION references the gate column, so the 1-row join
-    # can never be pruned away; broadcast keeps the streamed side's
-    # partitioning and row order untouched
-    return df.join(F.broadcast(gate), F.col("_spine_gate") == 1, "inner").drop(
-        "_spine_gate"
-    )
-
-
 def require_bounded_spines(
     df: DataFrame,
     specs: list[tuple["Column | str", int | None, str]],
     op_name: str,
+    by: list[str] | tuple[str, ...] = (),
 ) -> DataFrame:
-    """Fold a query's SEVERAL global (``by=[]``) bounded-spine gates into
-    ONE aggregate over the UN-gated input and one 1-row broadcast gate.
+    """Gate ``df`` on the bounded-spine contract: the returned frame is
+    row-identical to ``df`` but RAISES AT EXECUTION when a spine has
+    more (approximate) distinct values than its cap — over the whole
+    frame, or in the worst ``by`` group when ``by`` is given.
 
-    r13 fix (verdict): chaining :func:`require_bounded_spine` calls
-    nests the gates — gate k's aggregate subtree re-evaluates all k−1
-    earlier gate joins (distinct aggregates never hit ReuseExchange),
-    so k stacked gates cost ~k(k+1)/2 input scans inside one plan, and
-    each downstream reference of the gated frame repeats the whole
-    stack. One aggregate computing every bound costs ONE scan, and its
-    broadcast subtree is canonically identical at every reference, so
-    ReuseExchange builds it once.
+    ``specs``: ``(spine expression or column name, max_buckets, display
+    name)``. Entries with ``max_buckets=None`` are dropped (the caller
+    vouches); with none left ``df`` comes back unchanged, at zero extra
+    work. The first violated spec in order raises.
 
-    ``specs``: ``(spine expression or column name, max_buckets,
-    display name)`` — entries with ``max_buckets=None`` are dropped
-    (the caller vouches). The first violated spec in order raises with
-    the same message :func:`require_bounded_spine` produces for
-    ``by=[]``.
+    Every spec is counted in ONE aggregate over the un-gated input
+    (``groupBy(by)`` then a ``max`` over the groups when ``by`` is set),
+    and the check rides inside the main plan as a 1-row broadcast whose
+    projection ``raise_error``s on violation — no build-time action.
+    One gate per query, not one per spine: stacked gates would nest, each
+    aggregate re-evaluating every earlier gate join (distinct aggregates
+    never hit ReuseExchange). The single broadcast subtree is canonically
+    identical at every reference of the gated frame, so ReuseExchange
+    builds it once.
     """
     live = [(c, mb, nm) for (c, mb, nm) in specs if mb is not None]
     if not live:
         return df
-    agg = df.agg(
-        *[
-            F.approx_count_distinct(
-                c if isinstance(c, Column) else F.col(c)
-            ).alias(f"_nb{i}")
-            for i, (c, _mb, _nm) in enumerate(live)
-        ]
-    )
+    counts = [
+        F.approx_count_distinct(c).alias(f"_nb{i}") for i, (c, _, _) in enumerate(live)
+    ]
+    if by:
+        agg = df.groupBy(*by).agg(*counts).agg(
+            *[
+                F.coalesce(F.max(f"_nb{i}"), F.lit(0)).alias(f"_nb{i}")
+                for i in range(len(live))
+            ]
+        )
+    else:
+        agg = df.agg(*counts)
+    scope = f"per {list(by)} group" if by else "overall"
     chain = None
     for i, (_c, mb, nm) in enumerate(live):
         cond = F.col(f"_nb{i}") > mb
@@ -130,7 +73,7 @@ def require_bounded_spines(
                 F.lit(f"{op_name}: spine column {nm!r} has ~"),
                 F.col(f"_nb{i}").cast("string"),
                 F.lit(
-                    f" distinct values overall, over max_buckets="
+                    f" distinct values {scope}, over max_buckets="
                     f"{mb}. This operator's contract is a "
                     "CALLER-BOUNDED spine (it sorts or folds the whole "
                     "spine in one task/row) — pre-bucket the column "
@@ -141,6 +84,9 @@ def require_bounded_spines(
         )
         chain = F.when(cond, err) if chain is None else chain.when(cond, err)
     gate = agg.select(chain.otherwise(F.lit(1)).alias("_spine_gate"))
+    # the join CONDITION references the gate column, so the 1-row join
+    # can never be pruned away; broadcast keeps the streamed side's
+    # partitioning and row order untouched
     return df.join(F.broadcast(gate), F.col("_spine_gate") == 1, "inner").drop(
         "_spine_gate"
     )

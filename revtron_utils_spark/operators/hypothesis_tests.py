@@ -45,15 +45,15 @@ def ks_test(
     (bucket, slice) partial-agg shuffle + cumsum windows over the
     bounded histogram. Output one row: ``(n_a, n_b, ks_at, ks_d,
     ks_stat)``. The bounded-spine contract is enforced by
-    ``guards.require_bounded_spine`` (fail fast instead of
+    ``guards.require_bounded_spines`` (fail fast instead of
     single-task-sorting an unbinned spine; ``max_buckets=None``
     vouches).
     """
     from pyspark.sql import Window
 
-    from .guards import require_bounded_spine
+    from .guards import require_bounded_spines
 
-    df = require_bounded_spine(df, bucket_col, [], max_buckets, "ks_test")
+    df = require_bounded_spines(df, [(bucket_col, max_buckets, bucket_col)], "ks_test")
     s = F.col(slice_col)
     per = (
         df.where(s.isin(slice_a, slice_b))
@@ -187,14 +187,16 @@ def mann_whitney(
     be a .5 multiple under midranks).
 
     The bounded-spine contract is enforced by
-    ``guards.require_bounded_spine`` (callers bucket the metric first,
+    ``guards.require_bounded_spines`` (callers bucket the metric first,
     exactly like `ks_test`; ``max_buckets=None`` vouches).
     """
     from pyspark.sql import Window
 
-    from .guards import require_bounded_spine
+    from .guards import require_bounded_spines
 
-    df = require_bounded_spine(df, bucket_col, [], max_buckets, "mann_whitney")
+    df = require_bounded_spines(
+        df, [(bucket_col, max_buckets, bucket_col)], "mann_whitney"
+    )
     s = F.col(slice_col)
     per = (
         df.where(s.isin(slice_a, slice_b))
@@ -330,7 +332,7 @@ def kruskal_wallis(
     tied (correction denominator 0).
 
     Bounded contracts: the value spine via
-    ``guards.require_bounded_spine`` (bucket the metric first, exactly
+    ``guards.require_bounded_spines`` (bucket the metric first, exactly
     like ks_test/mann_whitney), the group catalog via ``max_groups``
     (the fold is one row wide).
     """
@@ -494,9 +496,11 @@ def anova_oneway(
     array, then the pinned F/η² tail. Output one row:
     ``(k, n, f_stat, eta_sq)`` — NULL when k < 2, N ≤ k, or SSW ≤ 0.
     """
-    from .guards import require_bounded_spine
+    from .guards import require_bounded_spines
 
-    df = require_bounded_spine(df, group_col, [], max_groups, "anova_oneway")
+    df = require_bounded_spines(
+        df, [(group_col, max_groups, group_col)], "anova_oneway"
+    )
     _require_sum_sq_width(df, value_col, "anova_oneway")
     dec = lambda c: c.cast("decimal(38,0)")
     v = integral_long(df, value_col, "anova_oneway")
@@ -785,9 +789,11 @@ def friedman_test(
     """
     from pyspark.sql import Window
 
-    from .guards import require_bounded_spine
+    from .guards import require_bounded_spines
 
-    df = require_bounded_spine(df, treatment_col, [], max_treatments, "friedman_test")
+    df = require_bounded_spines(
+        df, [(treatment_col, max_treatments, treatment_col)], "friedman_test"
+    )
     dec = lambda c: c.cast("decimal(38,0)")
     base = df.select(
         F.col(block_col).alias("_b"),
@@ -973,12 +979,10 @@ def cochran_q(
     counted (the complete-design convention). Output one row:
     ``(k, n_items, n_dropped, q)``.
     """
-    from .guards import require_bounded_spine
-
-    df = require_bounded_spine(df, treatment_col, [], max_treatments, "cochran_q")
-    dec = lambda c: c.cast("decimal(38,0)")
     from .dedup import _persist
+    from .guards import require_bounded_spines
 
+    dec = lambda c: c.cast("decimal(38,0)")
     base = df.select(
         F.col(item_col).alias("_i"),
         F.col(treatment_col).alias("_j"),
@@ -987,31 +991,15 @@ def cochran_q(
     # the operator makes four passes over base (k probe, per-item
     # aggregate, complete filter, per-treatment sums), and the caller's
     # outcome flags are often expression-heavy (the gate query computes
-    # lang-ID regexes) — persist base so the flags compute once, and
-    # spread a narrower-than-the-cluster input first so that one
-    # compute doesn't run on a single scan task (a small parquet table
-    # is one split; 2.3 s serial at sf0.1, r12 profile). Scale-adaptive:
-    # at real scale the input already has ≥ cores partitions.
-    # AQE/Connect-safe probe (r13 advice): `base.rdd` under AQE eagerly
-    # executes upstream shuffle stages (and sparkContext is absent on
-    # Spark Connect), so estimate the scan parallelism from the input
-    # FILE listing instead — no execution, no RDD translation. A plan
-    # with no input files (in-memory relation) estimates 0 splits and
-    # spreads, matching the old probe's behavior on tiny local inputs.
-    try:
-        par = df.sparkSession.sparkContext.defaultParallelism
-        files = base.inputFiles()
-        import os as _os
-
-        nbytes = sum(
-            _os.stat(f.removeprefix("file:")).st_size for f in files[:256]
-        )
-        est_splits = max(len(files), nbytes // (128 << 20))
-        if est_splits < par:
-            base = base.repartition(par)
-    except Exception:  # pragma: no cover - non-local URIs / no SparkContext
-        pass
-    base = _persist(base)
+    # lang-ID regexes) — persist base so the flags compute once. A
+    # narrow input is the caller's to spread at its file scan
+    # (`dedup._spread_if_narrow` looks through projections and filters
+    # only, so here, above an explode, it would not find the scan). The
+    # spine gate counts the cached base: gating the input instead would
+    # re-run its scan, and any spread in it, inside the gate.
+    base = require_bounded_spines(
+        _persist(base), [("_j", max_treatments, treatment_col)], "cochran_q"
+    )
     k_row = base.select(F.countDistinct("_j").alias("k")).first()
     k = int(k_row["k"] or 0)
     per_item = base.groupBy("_i").agg(
@@ -1145,9 +1133,9 @@ def welch_anova(
     ``(k, n, n_excluded, f_welch, df2)`` — NULL when fewer than 2
     usable groups survive.
     """
-    from .guards import require_bounded_spine
+    from .guards import require_bounded_spines
 
-    df = require_bounded_spine(df, group_col, [], max_groups, "welch_anova")
+    df = require_bounded_spines(df, [(group_col, max_groups, group_col)], "welch_anova")
     _require_sum_sq_width(df, value_col, "welch_anova")
     dec = lambda c: c.cast("decimal(38,0)")
     v = integral_long(df, value_col, "welch_anova")
@@ -1588,9 +1576,11 @@ def cramer_von_mises(
     """
     from pyspark.sql import Window
 
-    from .guards import require_bounded_spine
+    from .guards import require_bounded_spines
 
-    df = require_bounded_spine(df, bucket_col, [], max_buckets, "cramer_von_mises")
+    df = require_bounded_spines(
+        df, [(bucket_col, max_buckets, bucket_col)], "cramer_von_mises"
+    )
     s = F.col(slice_col)
     per = (
         df.where(s.isin(slice_a, slice_b))
@@ -1714,9 +1704,9 @@ def tukey_hsd(
     within-variance readout broadcast onto the tiny group-pair
     self-join.
     """
-    from .guards import require_bounded_spine
+    from .guards import require_bounded_spines
 
-    df = require_bounded_spine(df, group_col, [], max_groups, "tukey_hsd")
+    df = require_bounded_spines(df, [(group_col, max_groups, group_col)], "tukey_hsd")
     _require_sum_sq_width(df, value_col, "tukey_hsd")
     dec = lambda c: c.cast("decimal(38,0)")
     v = integral_long(df, value_col, "tukey_hsd")
@@ -2202,9 +2192,11 @@ def page_trend_test(
     """
     from pyspark.sql import Window
 
-    from .guards import require_bounded_spine
+    from .guards import require_bounded_spines
 
-    df = require_bounded_spine(df, treatment_col, [], max_treatments, "page_trend_test")
+    df = require_bounded_spines(
+        df, [(treatment_col, max_treatments, treatment_col)], "page_trend_test"
+    )
     dec = lambda c: c.cast("decimal(38,0)")
     base = df.select(
         F.col(block_col).alias("_b"),
@@ -2738,10 +2730,12 @@ def hodges_lehmann(
     """
     from pyspark.sql import Window
 
-    from .guards import require_bounded_spine
+    from .guards import require_bounded_spines
 
     keys = list(by or [])
-    df = require_bounded_spine(df, value_col, keys, max_buckets, "hodges_lehmann")
+    df = require_bounded_spines(
+        df, [(value_col, max_buckets, value_col)], "hodges_lehmann", by=keys
+    )
     dec = lambda c: c.cast("decimal(38,0)")
     cells = (
         df.select(

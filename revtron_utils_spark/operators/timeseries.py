@@ -240,14 +240,16 @@ def ewma(
     same order → same doubles). O(T²) doubles per group, T bounded by
     the caller's bucketing. Output one row per bucket:
     ``(*by, t, x, ewma)``. The bounded-spine contract is enforced by
-    ``guards.require_bounded_spine`` (an unbucketed time column would
+    ``guards.require_bounded_spines`` (an unbucketed time column would
     make the per-group fold row O(T²) — fail fast;
     ``max_buckets=None`` vouches).
     """
-    from .guards import require_bounded_spine
+    from .guards import require_bounded_spines
 
     keys = list(by)
-    df = require_bounded_spine(df, time_col, keys, max_buckets, "ewma")
+    df = require_bounded_spines(
+        df, [(time_col, max_buckets, time_col)], "ewma", by=keys
+    )
     per = df.groupBy(*keys, F.col(time_col).alias("t")).agg(
         F.sum(F.col(value_col).cast("long")).alias("x")
     )
@@ -605,14 +607,16 @@ def holt_linear(
     so the doubles agree bit-for-bit. Groups with one bucket emit a
     NULL trend/forecast. Output: ``(*by, n_buckets, level, trend,
     forecast)``. The bounded-spine contract is enforced by
-    ``guards.require_bounded_spine`` (an unbucketed time column would
+    ``guards.require_bounded_spines`` (an unbucketed time column would
     collect a multi-GB array row per group — fail fast;
     ``max_buckets=None`` vouches).
     """
-    from .guards import require_bounded_spine
+    from .guards import require_bounded_spines
 
     keys = list(by)
-    df = require_bounded_spine(df, time_col, keys, max_buckets, "holt_linear")
+    df = require_bounded_spines(
+        df, [(time_col, max_buckets, time_col)], "holt_linear", by=keys
+    )
     per = df.groupBy(*keys, F.col(time_col).alias("t")).agg(
         F.sum(F.col(value_col).cast("long")).alias("x")
     )
@@ -1123,13 +1127,15 @@ def durbin_watson(
     residual energy (perfect fit).
 
     The series is bounded per group by contract
-    (``require_bounded_spine`` on the time bucket — the acf_lags
+    (``require_bounded_spines`` on the time bucket — the acf_lags
     convention; the fold is one array per group).
     """
     from .dedup import _persist
-    from ..operators.guards import require_bounded_spine
+    from ..operators.guards import require_bounded_spines
 
-    df = require_bounded_spine(df, time_col, [group_col], max_points, "durbin_watson")
+    df = require_bounded_spines(
+        df, [(time_col, max_points, time_col)], "durbin_watson", by=[group_col]
+    )
     from .guards import integral_long
 
     dec = lambda c: c.cast("decimal(38,0)")
@@ -1313,13 +1319,13 @@ def runs_test(
     (2x vs m2); runs are an integer lag count over the time order;
     μ/σ/z are the pinned tail from integer n₁/n₂/R. All windows are
     group-partitioned; the value spine is caller-bounded
-    (``require_bounded_spine``). Output per group:
+    (``require_bounded_spines``). Output per group:
     ``(group, n1, n2, runs, z)`` — NULL z when either side is empty or
     σ² ≤ 0.
     """
-    from ..operators.guards import require_bounded_spine
+    from ..operators.guards import require_bounded_spines
 
-    df = require_bounded_spine(df, value_col, [], max_buckets, "runs_test")
+    df = require_bounded_spines(df, [(value_col, max_buckets, value_col)], "runs_test")
     base = df.select(
         F.col(group_col).alias("_g"),
         F.col(time_col).alias("_t"),
@@ -1479,12 +1485,14 @@ def ffill_series(
 
     Scale: spine generation is one row per group exploded to its own
     range (bounded per group by ``max_points`` via
-    ``require_bounded_spine``), the join is group+time keyed, the fill
+    ``require_bounded_spines``), the join is group+time keyed, the fill
     window is group-partitioned — nothing global anywhere.
     """
-    from .guards import require_bounded_spine
+    from .guards import require_bounded_spines
 
-    df = require_bounded_spine(df, time_col, [group_col], max_points, "ffill_series")
+    df = require_bounded_spines(
+        df, [(time_col, max_points, time_col)], "ffill_series", by=[group_col]
+    )
     base = df.select(
         F.col(group_col).alias("_g"),
         F.col(time_col).cast("long").alias("_t"),

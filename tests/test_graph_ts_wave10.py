@@ -54,7 +54,7 @@ def test_modularity_missing_node_raises(spark):
     comm = spark.createDataFrame([(1, "a")], "node long, community string")
     # r12: the check rides in-plan (raise_error behind a 1-row
     # broadcast), so it surfaces as a Spark execution error at the
-    # first action — the require_bounded_spine convention
+    # first action — the require_bounded_spines convention
     with pytest.raises(Exception, match="missing from the"):
         modularity(edges, comm).collect()
 

@@ -1,8 +1,9 @@
 """Round-8 scale-posture regression tests:
 
-1. ``guards.require_bounded_spine`` — the bounded-spine contract of
+1. ``guards.require_bounded_spines`` — the bounded-spine contract of
    ks_test / gain_curve / ewma / holt_linear fails FAST on a raw
-   high-cardinality spine instead of single-task-sorting it.
+   high-cardinality spine instead of single-task-sorting it, from one
+   aggregate per gate.
 2. The domain-quota curation ops keep their plans CONSTANT-size in the
    number of domains (broadcast-joined threshold tables, not F.when
    chains) — an adversarial 10k-domain fixture compiles and the largest
@@ -71,6 +72,91 @@ def test_guard_passes_under_cap(spark):
     df = _wide_spine(spark, 50)
     out = ewma(df, "t", "v", by=["s"], max_buckets=1000)
     assert out.count() == 50
+
+
+def _plan_nodes(plan):
+    """(node, names of its ancestors) for every node of an executed
+    physical plan, looking into adaptive plans, query stages and cached
+    relations; each node once."""
+    seen, out, todo = set(), [], [(plan, ())]
+    while todo:
+        p, up = todo.pop()
+        name = p.nodeName()
+        if name == "AdaptiveSparkPlan":
+            kids = [p.executedPlan()]
+        elif name.endswith("QueryStage"):
+            kids = [p.plan()]
+        elif name == "InMemoryTableScan":
+            kids = [p.relation().cachedPlan()]
+        else:
+            seq = p.children()
+            kids = [seq.apply(i) for i in range(seq.size())]
+        if name != "AdaptiveSparkPlan" and not name.endswith("QueryStage"):
+            if p.id() in seen:
+                continue
+            seen.add(p.id())
+            out.append((p, up))
+        todo += [(k, (*up, name)) for k in kids]
+    return out
+
+
+def test_cochran_q_spreads_once_below_the_explode(spark, sf_dir):
+    """The documents scan is spread where it is read, under the explode
+    that fans each document out to its three detectors; the spine gate
+    counts the cached frame and adds no second spread."""
+    import __spark_entry__ as entry
+
+    df = entry.queries()["cochran_q"](spark, sf_dir)
+    df.collect()
+    robin = [
+        up
+        for p, up in _plan_nodes(df._jdf.queryExecution().executedPlan())
+        if p.nodeName() == "Exchange"
+        and "RoundRobinPartitioning" in p.outputPartitioning().toString()
+    ]
+    assert len(robin) == 1, robin
+    assert "Generate" in robin[0]
+
+
+def test_spine_gate_per_group_raises_first_violated_spec(spark):
+    from revtron_utils_spark.operators.guards import require_bounded_spines
+
+    # per g: ~1000 distinct t, ~100 distinct u
+    df = spark.range(3000).select(
+        (F.col("id") % 3).alias("g"),
+        F.col("id").alias("t"),
+        (F.col("id") % 300).alias("u"),
+    )
+    for specs, first in (
+        ([("u", 50, "u"), ("t", 100, "t")], ("u", 50)),
+        ([("u", 500, "u"), ("t", 100, "t")], ("t", 100)),
+    ):
+        nm, mb = first
+        msg = (
+            rf"\bop: spine column '{nm}' has ~\d+ distinct values per \['g'\] "
+            rf"group, over max_buckets={mb}\. This operator's contract"
+        )
+        gated = require_bounded_spines(df, specs, "op", by=["g"])
+        with pytest.raises(Exception, match=msg):
+            gated.collect()
+    specs = [("u", 500, "u"), ("t", 5000, "t")]
+    ok = require_bounded_spines(df, specs, "op", by=("g",))
+    assert ok.count() == 3000
+
+
+def test_global_spine_gate_plans_one_aggregate_pair(spark):
+    from revtron_utils_spark.operators.guards import require_bounded_spines
+
+    df = spark.range(1000).select((F.col("id") % 7).alias("t"))
+    gated = require_bounded_spines(df, [("t", 100, "t")], "op")
+    assert len(gated.collect()) == 1000
+    aggs = [
+        p.simpleString(100)
+        for p, _ in _plan_nodes(gated._jdf.queryExecution().executedPlan())
+        if p.nodeName() == "HashAggregate"
+    ]
+    assert len(aggs) == 2, aggs
+    assert sum("partial_approx_count_distinct" in a for a in aggs) == 1
 
 
 # ----------------------------------------------- quota ops at 10k domains

@@ -41,3 +41,31 @@ def test_read_parquet_cache_is_bounded(spark, tmp_path, monkeypatch):
     assert len(io._frame_cache) <= io._FRAME_CACHE_MAX
     # the oldest entry was evicted: the next read builds a new frame
     assert io.read_parquet(spark, str(path)) is not first
+
+
+def test_read_parquet_follows_a_flip_to_nanosecond_timestamps(spark, tmp_path):
+    """A path re-pointed from a microsecond image to a pyarrow-written
+    timestamp[ns] image is re-read with the ns columns of the new files
+    (Spark's reader rejects TIMESTAMP(NANOS) unless told to read them
+    as longs)."""
+    import datetime as dt
+
+    from revtron_utils_spark.io import read_parquet
+
+    ts = [dt.datetime(2024, 1, 2, 3, 4, 5, 678901), dt.datetime(2024, 5, 6)]
+    for unit in ("us", "ns"):
+        (tmp_path / unit).mkdir()
+        pq.write_table(
+            pa.table({"ts": pa.array(ts, pa.timestamp(unit))}),
+            tmp_path / unit / "part-0.parquet",
+        )
+    link = tmp_path / "t"
+    link.symlink_to("us")
+    assert read_parquet(spark, str(link)).count() == 2
+
+    tmp = tmp_path / "t.new"
+    tmp.symlink_to("ns")
+    os.replace(tmp, link)
+    df = read_parquet(spark, str(link))
+    assert dict(df.dtypes)["ts"] == "timestamp"
+    assert sorted(r["ts"] for r in df.collect()) == ts

@@ -49,7 +49,7 @@ CASE_BRANCH_LIMIT = 64
 #       histograms, bucketed time, label sets, 9 Benford digits,
 #       O(strata)/O(raters) frames) — ks_test and gain_curve
 #       additionally enforce the bound at runtime via
-#       guards.require_bounded_spine.
+#       guards.require_bounded_spines.
 # Composition gates (analytics_pipeline, preference_pipeline,
 # attribution_multi_touch) inherit shape (b) from their members.
 # Anything NOT listed here that plans an unpartitioned window fails.
@@ -62,10 +62,10 @@ BOUNDED_SPINE_OK: set[str] = {
     "rolling_wau",
     # (b) caller-bounded spines
     "ks_test",
-    "mann_whitney",  # require_bounded_spine-guarded value spine (r9)
-    "bh_fdr",  # require_bounded_spine-guarded test family (r9)
-    "kruskal_wallis",  # require_bounded_spine-guarded value spine (r10)
-    "moods_median",  # require_bounded_spine-guarded grand-median spine (r10)
+    "mann_whitney",  # require_bounded_spines-guarded value spine (r9)
+    "bh_fdr",  # require_bounded_spines-guarded test family (r9)
+    "kruskal_wallis",  # require_bounded_spines-guarded value spine (r10)
+    "moods_median",  # require_bounded_spines-guarded grand-median spine (r10)
     "cramer_von_mises",  # same guarded bucket spine as ks_test (r11)
     "dunn_test",  # same guarded doubled-midrank spine as kruskal_wallis (r11)
     "dataset_card",  # median over the bounded document-LENGTH histogram (r11)

@@ -189,6 +189,9 @@ def _plans(spark, queries, args) -> None:
             )
         except Exception as exc:  # noqa: BLE001 - record, keep going
             txt = f"ERROR building plan: {type(exc).__name__}: {exc}\n"
+        # as bench.py does between queries: a frame an earlier build
+        # cached would otherwise replace a matching subtree of this plan
+        release(spark)
         (out_dir / f"{name}_{args.suffix}.txt").write_text(txt)
         print(f"wrote plans/{args.round}/{name}_{args.suffix}.txt")
     print(f"done: {len(names)}/{len(names)}")
