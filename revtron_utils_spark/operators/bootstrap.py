@@ -34,6 +34,8 @@ import math
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .guards import require_integral_id
+
 _P = 999_999_937
 _A = 2_654_435_761 % _P
 _B1 = 40_503
@@ -67,22 +69,6 @@ _POISSON_CDF_H = (
 )
 for _t, _h in zip(_POISSON_CDF, _POISSON_CDF_H):
     assert (_h - 1) / _P < _t <= _h / _P, "poisson threshold drift"
-
-
-_INTEGRAL = {"tinyint", "smallint", "int", "bigint", "long"}
-
-
-def _require_integral_id(df: DataFrame, id_col: str) -> None:
-    """Mirror of ``curation._require_integral_id``: a non-integral id
-    silently NULLs (or truncates) under the cast and drops the unit from
-    every resample while it still counts in ``point_mean`` — fail loudly."""
-    dt = df.schema[id_col].dataType.simpleString()
-    if dt not in _INTEGRAL:
-        raise TypeError(
-            f"id column {id_col!r} has type {dt}; the deterministic "
-            "bootstrap hash requires an integral id (pre-hash strings "
-            "to a long first)"
-        )
 
 
 def _hash_pre(id_col: str):
@@ -141,7 +127,7 @@ def poisson_bootstrap_ci(
     smallest of the B resample means (ties broken by replicate index,
     so the rank pick is total).
     """
-    _require_integral_id(df, id_col)
+    require_integral_id(df, id_col, "deterministic bootstrap hash")
     keys = list(by)
     lo_rank = math.ceil(n_boot * alpha / 2)
     hi_rank = math.ceil(n_boot * (1 - alpha / 2))
@@ -283,7 +269,7 @@ def permutation_test(
     ``value_col`` must be an exact integer metric (cents/counts), like
     the bootstrap.
     """
-    _require_integral_id(df, id_col)
+    require_integral_id(df, id_col, "deterministic bootstrap hash")
     g = F.col(group_col)
     base = df.where(g.isin([group_a, group_b])).select(
         _hash_pre(id_col).alias("_hp"),

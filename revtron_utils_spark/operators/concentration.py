@@ -10,13 +10,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T  # noqa: F401
 
 from .guards import integral_long  # noqa: F401
-from .guards import require_sum_sq_width as _sum_sq_width
 
-
-def _require_sum_sq_width(df: DataFrame, col: str, op_name: str) -> None:
-    """Fail fast when Σ value² could overflow DECIMAL(38,0) — measured
-    from the data; shared implementation in :mod:`.guards`."""
-    _sum_sq_width(df, col, op_name)
 
 def rolling_zscore(
     df: DataFrame,

@@ -24,6 +24,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
+from .guards import require_integral_id
+
 # Knuth's multiplicative constant reduced mod M; M prime < 2^30 so the
 # product of two residues stays far inside int64 (no ANSI overflow).
 HASH_MOD = 1_000_000_007
@@ -54,23 +56,6 @@ def id_hash(col: Column | str, seed: int = 0) -> Column:
     return (r * F.lit(_seed_mult(seed)) + F.lit(int(seed) % HASH_MOD)) % HASH_MOD
 
 
-_INTEGRAL = ("byte", "short", "int", "integer", "bigint", "long")
-
-
-def _require_integral_id(df: DataFrame, id_col: str) -> None:
-    """The modular hash silently yields NULL for non-integer ids under
-    non-ANSI casts (routing every row to the last split / out of the
-    sample) — fail loudly instead. String ids should be pre-hashed to a
-    long (e.g. ``xxhash64``) by the caller, with the caveat that the
-    DuckDB oracle can then no longer reproduce the buckets."""
-    dt = df.schema[id_col].dataType.simpleString()
-    if dt not in _INTEGRAL:
-        raise TypeError(
-            f"id column {id_col!r} has type {dt}; the deterministic hash "
-            "requires an integral id (pre-hash strings to a long first)"
-        )
-
-
 def hash_split(
     df: DataFrame,
     id_col: str,
@@ -85,7 +70,7 @@ def hash_split(
     under corpus growth (a row's split never changes when other rows are
     added — the property that keeps eval sets frozen across snapshots).
     """
-    _require_integral_id(df, id_col)
+    require_integral_id(df, id_col)
     total = sum(weights.values())
     bucket = id_hash(id_col, seed)
     expr = None
@@ -110,7 +95,7 @@ def hash_sample(
     ``bucket < fraction*M``). Repeatable, join-stable (the same ids are
     kept in every table sampled with the same seed — so sampled fact and
     dim tables still join)."""
-    _require_integral_id(df, id_col)
+    require_integral_id(df, id_col)
     return df.filter(id_hash(id_col, seed) < int(fraction * HASH_MOD))
 
 
@@ -142,7 +127,7 @@ def stratified_hash_sample(
     table (NOT a CASE chain — plan size stays constant in the number
     of strata); unlisted strata fall back to ``default_fraction`` via
     a left join + coalesce. Still one scan, no shuffle of ``df``."""
-    _require_integral_id(df, id_col)
+    require_integral_id(df, id_col)
     bucket = id_hash(id_col, seed)
     thr = {v: int(f * HASH_MOD) for v, f in fractions.items()}
     if not thr:
@@ -389,7 +374,7 @@ def cap_per_domain(
     broadcast-joined back): domain cardinality never reaches the driver
     as a dict nor the expression tree as a CASE chain — the only driver
     values are two one-row existence probes."""
-    _require_integral_id(df, id_col)
+    require_integral_id(df, id_col)
     if n < 1:
         raise ValueError("n must be >= 1")
     from .dedup import _persist
@@ -495,7 +480,7 @@ def take_token_budget(
 
     from .dedup import _persist
 
-    _require_integral_id(df, id_col)
+    require_integral_id(df, id_col)
     tok = (F.col(token_col) if token_col else token_count(text_col)).cast("long")
     tagged = df.withColumn("_tok", tok)
     totals = _persist(
@@ -613,7 +598,7 @@ def mixture_sample(
     scan: no shuffle of the kept data, stable row membership under
     corpus growth of other domains (a row's fate depends only on its
     id, its domain's count, and the binding domain)."""
-    _require_integral_id(df, id_col)
+    require_integral_id(df, id_col)
     if not proportions:
         raise ValueError("proportions must be non-empty")
     # r12: the per-domain counts used to be collect()ed to the driver at
@@ -680,7 +665,7 @@ def weighted_hash_sample(
     bucket falls below ``weight`` (a [0,1] column) — quality-weighted
     corpus downsampling (keep high-quality docs with higher probability)
     that stays reproducible across runs and engines, unlike rand()."""
-    _require_integral_id(df, id_col)
+    require_integral_id(df, id_col)
     w = F.col(weight_col) if isinstance(weight_col, str) else weight_col
     thr = (w * HASH_MOD).cast("long")
     return df.filter(id_hash(id_col, seed) < thr)
@@ -891,7 +876,7 @@ def deterministic_shuffle(
     only driver state is one count per partition. The rank is
     independent of the partitioning itself (the key (hash, id) is a
     strict total order)."""
-    _require_integral_id(df, id_col)
+    require_integral_id(df, id_col)
     keyed = df.withColumn("_sk", id_hash(id_col, seed))
     return distributed_rank(
         keyed,
@@ -1185,7 +1170,7 @@ def distribution_match(
     """
     import math
 
-    _require_integral_id(df, id_col)
+    require_integral_id(df, id_col)
     # only the caller-enumerated weight table lives on the driver;
     # bucket populations are aggregated IN-PLAN and joined back
     buckets = sorted(target_weights)
@@ -1396,7 +1381,7 @@ def contrastive_pairs(
 
     Output: ``(anchor_id, positive_id, negative_id)``.
     """
-    _require_integral_id(df, id_col)
+    require_integral_id(df, id_col)
     from .dedup import _persist
 
     base = _persist(

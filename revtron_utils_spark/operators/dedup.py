@@ -3,18 +3,25 @@ shuffle-minimal for 100 TB inputs:
 
 * **exact_dedup** — one map-side-combined hash aggregate on the
   fingerprint (min_by survivor row), no join, no sort.
-* **minhash_lsh_pairs / minhash_lsh_dedup** — shingle → k minhashes →
-  b bands; candidate pairs come from a self-equi-join on (band,
-  band_hash) — the only shuffle is on band hashes, never an all-pairs
-  product. Exact Jaccard verification runs only on candidates.
-* **simhash_pairs** — 64-bit simhash, pigeonhole banding on 16-bit
-  chunks (Hamming ≤ 3 ⇒ some chunk equal), verify with bit_count(xor).
+* **minhash_lsh_pairs / minhash_lsh_dedup / minhash_poly_pairs** —
+  shingle → k minhashes → b bands; candidate pairs come from a
+  self-equi-join on (band, band key) — the only shuffle is on band keys,
+  never an all-pairs product. Exact Jaccard verification runs only on
+  candidates. Both hash families run one pipeline; only the featurizer
+  differs.
+* **simhash_pairs / simhash_poly_pairs** — 64-bit (or 60-bit poly)
+  simhash, pigeonhole banding on 4 chunks of 16 (or 15) bits
+  (Hamming ≤ 3 ⇒ some chunk equal), verify with bit_count(xor).
 * **embedding_neardup_pairs** — cosine near-dup with either a blocking
   column (exact within block) or random-hyperplane LSH buckets.
 
-Everything is DataFrame-native; hashes are Spark's ``xxhash64`` bounded
-into a Mersenne-prime field so the universal-hash arithmetic
-``(a*h + b) mod p`` stays inside int64 under ANSI mode.
+Everything is DataFrame-native. Two hash families: the throughput
+family hashes shingles with crc32 and digests each MinHash band with
+blake2b (SimHash: blake2b token hashes), in one Arrow pass; the
+engine-exact ``poly`` family (polynomial char-code fold mod 1e9+7,
+affine permutations) is reproducible in SQL, so its whole pipeline has
+a DuckDB oracle twin. The affine permutations ``(a*h + b) mod p`` stay
+inside int64 (p = 2^31-1 or 1e9+7).
 
 Algorithms from the published literature: MinHash resemblance sketches
 (Broder, "On the resemblance and containment of documents", SEQUENCES
@@ -38,6 +45,12 @@ from pyspark.sql import Window as W
 
 from ..functions import text as TX
 from ..functions import vectors as VX
+
+# The cross-engine-exact hash family lives in functions/classifier.py
+# (single source of truth for the fold and its constants — a second
+# copy here once drifted a hand-maintained "must match" comment apart).
+from ..functions.classifier import POLY_MOD
+from ..functions.classifier import token_poly_hash as _poly_hash
 
 MERSENNE_P = (1 << 31) - 1  # 2^31-1, prime
 
@@ -70,13 +83,18 @@ def _spread_if_narrow(df: DataFrame) -> DataFrame:
     and filters over one file relation) spreads: a frame that lists no
     input files (in-memory) or is already shuffled passes through, since
     another round-robin Exchange would re-shuffle its payload for
-    nothing. Splits are estimated from Spark's own listing of the
-    relation (the cochran_q r13 convention: no execution, no RDD
-    translation, any filesystem Spark reads)."""
+    nothing. A cached frame is looked through to the plan it caches, so
+    a cached leaf scan keeps its few partitions and spreads too. Splits
+    are estimated from Spark's own listing of the relation (the
+    cochran_q r13 convention: no execution, no RDD translation, any
+    filesystem Spark reads)."""
     try:
         node = df._jdf.queryExecution().optimizedPlan()
-        while node.nodeName() in ("Project", "Filter"):
-            node = node.children().head()
+        while node.nodeName() in ("Project", "Filter", "InMemoryRelation"):
+            if node.nodeName() == "InMemoryRelation":
+                node = node.cacheBuilder().logicalPlan()
+            else:
+                node = node.children().head()
         if node.nodeName() != "LogicalRelation":
             return df
         rel = node.relation()
@@ -167,88 +185,6 @@ def _hash_params(num_hashes: int, seed: int) -> list[tuple[int, int]]:
     return [(rng.randrange(1, MERSENNE_P), rng.randrange(0, MERSENNE_P)) for _ in range(num_hashes)]
 
 
-def minhash_signature(
-    text_col: str | Column,
-    num_hashes: int = 64,
-    shingle_n: int = 3,
-    seed: int = 42,
-) -> Column:
-    """k-minhash signature (array<long>) over word ``shingle_n``-grams.
-    ``pmod(xxhash64(s), p)`` bounds shingle hashes below 2^31 so
-    ``a*h + b`` (< 2^62) never overflows under ANSI mode. Empty shingle
-    sets (docs shorter than n tokens) get sentinel signature p (max).
-
-    Single-pass formulation: shingle hashes are computed once, then one
-    ``aggregate`` folds them into the k-wide signature with a nested
-    ``zip_with`` — keeps codegen size O(1) in k instead of emitting k
-    independent array traversals (which was ~25× slower to compile)."""
-    params = _hash_params(num_hashes, seed)
-    a_arr = F.array(*[F.lit(a).cast("long") for a, _ in params])
-    b_arr = F.array(*[F.lit(b).cast("long") for _, b in params])
-    pstruct = F.zip_with(a_arr, b_arr, lambda a, b: F.struct(a.alias("a"), b.alias("b")))
-    shingles = F.array_distinct(TX.word_ngrams(text_col, shingle_n))
-    hs = F.transform(shingles, lambda s: F.pmod(F.xxhash64(s), F.lit(MERSENNE_P)))
-    init = F.array_repeat(F.lit(MERSENNE_P).cast("long"), num_hashes)
-    return F.aggregate(
-        hs,
-        init,
-        lambda acc, h: F.zip_with(
-            acc,
-            pstruct,
-            lambda m, p: F.least(m, F.pmod(p["a"] * h + p["b"], F.lit(MERSENNE_P))),
-        ),
-    )
-
-
-def minhash_features_arrow(num_hashes: int = 64, shingle_n: int = 3, seed: int = 42):
-    """One Arrow pass producing BOTH the shingle set and the minhash
-    signature (struct column) — the banding path needs the signature, the
-    verification path needs the shingles; computing them together avoids
-    a second tokenization/HOF projection over the corpus."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    params = _hash_params(num_hashes, seed)
-    A = np.array([a for a, _ in params], dtype=np.int64)[:, None]
-    B = np.array([b for _, b in params], dtype=np.int64)[:, None]
-    sentinel = [MERSENNE_P] * num_hashes
-
-    def feats(texts):
-        import zlib
-
-        sigs, shingles = [], []
-        for t in texts:
-            toks = (t or "").split()
-            sh = sorted(
-                {
-                    " ".join(toks[i : i + shingle_n])
-                    for i in range(len(toks) - shingle_n + 1)
-                }
-            )
-            shingles.append(sh)
-            if not sh:
-                sigs.append(sentinel)
-                continue
-            h = np.fromiter(
-                (zlib.crc32(s.encode()) % MERSENNE_P for s in sh),
-                dtype=np.int64,
-                count=len(sh),
-            )
-            sigs.append(((A * h + B) % MERSENNE_P).min(axis=1).tolist())
-        return pd.DataFrame({"sig": sigs, "shingles": shingles})
-
-    # asNondeterministic: the callers filter on the struct's `shingles`
-    # field, and the optimizer pushes that filter below the projection
-    # WITH A COPY of the UDF — every row paid the shingle+minhash pass
-    # twice (guide §4.4; r12 plan audit found the double ArrowEvalPython
-    # in corpus_pipeline). The function is pure; the flag only forbids
-    # the optimizer's duplication/reordering.
-    return pandas_udf(
-        feats, "sig: array<long>, shingles: array<string>"
-    ).asNondeterministic()
-
-
 def minhash_banded_arrow(
     num_hashes: int = 64, bands: int = 16, shingle_n: int = 3, seed: int = 42
 ):
@@ -309,11 +245,42 @@ def minhash_banded_arrow(
             bhashes.append(band_keys(sig))
         return pd.DataFrame({"bhash": bhashes, "shingles": shingles})
 
-    # asNondeterministic: see minhash_features_arrow — prevents the
-    # pushed size(shingles)>0 filter from duplicating the UDF
+    # asNondeterministic: the featurizer filters on the struct's
+    # `shingles` field, and the optimizer pushes that filter below the
+    # projection WITH A COPY of the UDF — every row paid the shingle+
+    # minhash pass twice (guide §4.4; r12 plan audit found the double
+    # ArrowEvalPython in corpus_pipeline). The function is pure; the flag
+    # only forbids the optimizer's duplication/reordering.
     return pandas_udf(
         feats, "bhash: array<long>, shingles: array<string>"
     ).asNondeterministic()
+
+
+def _minhash_features(
+    df: DataFrame,
+    id_col: Column,
+    text_col: str,
+    family: str,
+    num_hashes: int,
+    bands: int,
+    shingle_n: int,
+    seed: int = 42,
+) -> DataFrame:
+    """The one MinHash featurizer: ``(id, bhash, shingles)`` per document
+    with at least one shingle, from one Arrow pass. ``bhash`` holds one
+    LSH key per band; the hash family is the only thing that varies:
+    ``crc32`` (crc32 shingle hashes, blake2b band digests, long keys) or
+    ``poly`` (the engine-exact polynomial family, string keys; ``seed``
+    is unused, its permutations are fixed)."""
+    if family == "poly":
+        udf, key = minhash_poly_features_arrow(num_hashes, bands, shingle_n), "bkeys"
+    else:
+        udf, key = minhash_banded_arrow(num_hashes, bands, shingle_n, seed), "bhash"
+    return (
+        df.select(id_col.alias("id"), udf(F.col(text_col)).alias("f"))
+        .select("id", F.col(f"f.{key}").alias("bhash"), F.col("f.shingles").alias("shingles"))
+        .filter(F.size("shingles") > 0)
+    )
 
 
 def _cap_hot_buckets(
@@ -360,9 +327,7 @@ def _cap_hot_buckets(
         return cold
     if mode != "sample":
         raise ValueError(f"unknown hot-bucket mode {mode!r}")
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy(*keys).orderBy(id_col)
+    w = W.partitionBy(*keys).orderBy(id_col)
     kept = (
         banded.join(hot, keys, "left_semi")
         .withColumn("_rk", F.row_number().over(w))
@@ -372,88 +337,22 @@ def _cap_hot_buckets(
     return cold.unionByName(kept.select(*banded.columns))
 
 
-def minhash_lsh_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 64,
-    bands: int = 16,
-    shingle_n: int = 3,
-    jaccard_threshold: float = 0.7,
-    seed: int = 42,
-    impl: str = "arrow",
-    max_bucket: int | None = None,
-    hot_bucket_mode: str = "drop",
+def _band_candidates(
+    feats: DataFrame, max_bucket: int | None, hot_bucket_mode: str
 ) -> DataFrame:
-    """Near-duplicate candidate pairs via MinHash banding, verified with
-    exact shingle-set Jaccard. Returns (id_a, id_b, jaccard) with
-    id_a < id_b.
-
-    Scale path: signature is a narrow projection; candidates come from a
-    groupable equi-join on (band, band_hash) — shuffle volume is
-    O(rows × bands × 8 bytes), not O(rows²). ``max_bucket`` bounds the
-    worst case: see :func:`_cap_hot_buckets` for the degenerate-bucket
-    failure mode AQE cannot fix and the drop/sample recall accounting.
-    """
-    assert num_hashes % bands == 0, "bands must divide num_hashes"
-    rows_per_band = num_hashes // bands
-
-    if impl == "arrow":
-        # band keys are computed inside the same Arrow pass as the
-        # shingles — the 64-long signature never becomes a plan column,
-        # and the interpreted per-band slice/concat/hash projection (and
-        # its persist) disappears
-        feats = minhash_banded_arrow(num_hashes, bands, shingle_n, seed)(F.col(text_col))
-        shingled = df.select(F.col(id_col).alias("id"), feats.alias("f")).select(
-            "id", F.col("f.bhash").alias("bhash"), F.col("f.shingles").alias("shingles")
-        )
-    else:
-        shingled = df.select(
-            F.col(id_col).alias("id"),
-            F.array_distinct(TX.word_ngrams(text_col, shingle_n)).alias("shingles"),
-            minhash_signature(text_col, num_hashes, shingle_n, seed).alias("sig"),
-        )
-    shingled = shingled.filter(F.size("shingles") > 0)
-    # materialize features once — the candidate self-join would otherwise
-    # recompute the (expensive) shingle+minhash projection on both sides
-    shingled = _persist(shingled)
-
-    # band keys only (id + 8-byte hash) ride through the explode and the
-    # candidate join — shingle arrays would inflate the shuffle ~16×;
-    # they're re-attached to the (small) candidate pair set afterwards
-    if impl == "arrow":
-        banded = shingled.select(
-            "id", F.posexplode("bhash").alias("band", "bhash")
-        )
-    else:
-        banded = shingled.select(
-            "id",
-            F.explode(
-                F.transform(
-                    F.sequence(F.lit(0), F.lit(bands - 1)),
-                    lambda b: F.struct(
-                        b.alias("band"),
-                        F.xxhash64(
-                            F.concat_ws(
-                                ",",
-                                F.transform(
-                                    F.slice(F.col("sig"), b * rows_per_band + 1, rows_per_band),
-                                    lambda x: x.cast("string"),
-                                ),
-                            )
-                        ).alias("bhash"),
-                    ),
-                )
-            ).alias("bk"),
-        ).select("id", "bk.band", "bk.bhash")
-        # the candidate self-join reads banded twice; persist so the
-        # 16-band hash projection (interpreted HOFs) runs once per row
-        banded = _persist(banded)
-
+    """Candidate ``(id_a, id_b)`` pairs, ``id_a < id_b``, of documents
+    agreeing on at least one band key: one self-equi-join on
+    (band, bhash). Only the band keys (id + key) ride through the explode
+    and the join — shingle arrays would inflate the shuffle ~bands×;
+    :func:`_verify_jaccard` re-attaches them to the (small) candidate
+    set. The hot-bucket cap bounds the join (:func:`_cap_hot_buckets`);
+    with the poly family the cap is SQL-reproducible (QUALIFY
+    row_number() OVER (PARTITION BY band, bkey) <= max_bucket in the
+    oracle), so a capped run stays hash-verifiable."""
+    banded = feats.select("id", F.posexplode("bhash").alias("band", "bhash"))
     banded = _cap_hot_buckets(banded, ["band", "bhash"], max_bucket, hot_bucket_mode)
-    left = banded.alias("l")
-    right = banded.alias("r")
-    cand_ids = (
+    left, right = banded.alias("l"), banded.alias("r")
+    return (
         left.join(
             right,
             (F.col("l.band") == F.col("r.band"))
@@ -463,9 +362,17 @@ def minhash_lsh_pairs(
         .select(F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b"))
         .dropDuplicates(["id_a", "id_b"])
     )
-    # candidate set is orders of magnitude smaller than the corpus —
-    # broadcast it so the shingle re-attachment never shuffles the corpus
-    sh = shingled.select("id", "shingles")
+
+
+def _verify_jaccard(
+    feats: DataFrame, cand_ids: DataFrame, jaccard_threshold: float
+) -> DataFrame:
+    """Exact shingle-set Jaccard of each candidate pair, kept when
+    ``>= jaccard_threshold``: ``(id_a, id_b, jaccard)``, jaccard rounded
+    to 6 places. The candidate set is orders of magnitude smaller than
+    the corpus, so it is broadcast and the shingle re-attachment never
+    shuffles the corpus."""
+    sh = feats.select("id", "shingles")
     cand = (
         sh.withColumnRenamed("id", "id_a")
         .withColumnRenamed("shingles", "sh_a")
@@ -483,6 +390,42 @@ def minhash_lsh_pairs(
     )
 
 
+def minhash_lsh_pairs(
+    df: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    num_hashes: int = 64,
+    bands: int = 16,
+    shingle_n: int = 3,
+    jaccard_threshold: float = 0.7,
+    seed: int = 42,
+    max_bucket: int | None = None,
+    hot_bucket_mode: str = "drop",
+) -> DataFrame:
+    """Near-duplicate candidate pairs via MinHash banding, verified with
+    exact shingle-set Jaccard. Returns (id_a, id_b, jaccard) with
+    id_a < id_b.
+
+    Scale path: band keys come out of one Arrow pass with the shingles
+    (crc32 shingle hashes, blake2b band digests; the signature never
+    becomes a plan column); candidates come from a groupable equi-join
+    on (band, band_hash) — shuffle volume is O(rows × bands × 8 bytes),
+    not O(rows²). ``max_bucket`` bounds the worst case: see
+    :func:`_cap_hot_buckets` for the degenerate-bucket failure mode AQE
+    cannot fix and the drop/sample recall accounting.
+    """
+    # materialize features once — the candidate self-join and the
+    # verification would otherwise recompute the (expensive) shingle+
+    # minhash projection on every side
+    feats = _persist(
+        _minhash_features(
+            df, F.col(id_col), text_col, "crc32", num_hashes, bands, shingle_n, seed
+        )
+    )
+    cand_ids = _band_candidates(feats, max_bucket, hot_bucket_mode)
+    return _verify_jaccard(feats, cand_ids, jaccard_threshold)
+
+
 def minhash_lsh_dedup(
     df: DataFrame,
     text_col: str = "text",
@@ -497,15 +440,6 @@ def minhash_lsh_dedup(
     pairs = minhash_lsh_pairs(df, text_col, id_col, **kwargs)
     losers = pairs.select(F.col("id_b").alias(id_col)).distinct()
     return df.join(losers, id_col, "left_anti")
-
-
-# The cross-engine-exact hash family lives in functions/classifier.py
-# (single source of truth for the fold and its constants — a second
-# copy here once drifted a hand-maintained "must match" comment apart).
-from ..functions.classifier import (  # noqa: E402
-    POLY_MOD,
-    token_poly_hash as _poly_hash,
-)
 
 
 def minhash_poly_features_arrow(num_hashes: int = 32, bands: int = 8, shingle_n: int = 3):
@@ -586,7 +520,7 @@ def minhash_poly_features_arrow(num_hashes: int = 32, bands: int = 8, shingle_n:
             )
         return pd.DataFrame({"bkeys": bkeys_out, "shingles": sh_out})
 
-    # asNondeterministic: see minhash_features_arrow — prevents the
+    # asNondeterministic: see minhash_banded_arrow — prevents the
     # pushed size(shingles)>0 filter from duplicating the UDF
     return pandas_udf(
         feats, "bkeys: array<string>, shingles: array<string>"
@@ -616,104 +550,54 @@ def minhash_poly_pairs(
     lets the whole LSH path (not just its exact-Jaccard tail) be
     hash-verified in the oracle gate.
 
-    Same physical plan as `minhash_lsh_pairs`: narrow (id, band, key)
-    projection through the candidate self-equi-join — shuffle is
-    O(rows × bands), never O(rows²) — then exact-Jaccard verification on
-    the (small, broadcast) candidate set only. ``impl='arrow'`` (default)
-    computes the identical hashes in one Arrow pass
-    (`minhash_poly_features_arrow`, ~20× at corpus scale);
-    ``impl='expr'`` is the pure-codegen path (ANSI note: max
+    Same pipeline as `minhash_lsh_pairs` with the ``poly`` featurizer:
+    narrow (id, band, key) projection through the candidate
+    self-equi-join — shuffle is O(rows × bands), never O(rows²) — then
+    exact-Jaccard verification on the (small, broadcast) candidate set
+    only. ``impl='arrow'`` (default) computes the hashes in one Arrow
+    pass (`minhash_poly_features_arrow`, ~20× at corpus scale);
+    ``impl='expr'`` is the pure-codegen reference twin (ANSI note: max
     intermediate is a_i·h < 1e18 < 2^63). Both are bit-equal to the
     oracle."""
     assert num_hashes % bands == 0, "bands must divide num_hashes"
-    r = num_hashes // bands
-
     if impl == "arrow":
-        feats = minhash_poly_features_arrow(num_hashes, bands, shingle_n)(
-            F.col(text_col)
-        )
-        sigs = (
-            df.select(F.col(id_col).alias("id"), feats.alias("f"))
-            .select("id", F.col("f.bkeys").alias("bkeys"), F.col("f.shingles").alias("shingles"))
-            .filter(F.size("shingles") > 0)
-        )
-        sigs = _persist(sigs)
-        banded = sigs.select(
-            "id", F.posexplode("bkeys").alias("band", "bkey")
+        feats = _persist(
+            _minhash_features(df, F.col(id_col), text_col, "poly", num_hashes, bands, shingle_n)
         )
     else:
+        r = num_hashes // bands
         shingled = df.select(
             F.col(id_col).alias("id"),
             F.array_distinct(TX.word_ngrams(text_col, shingle_n)).alias("shingles"),
         ).filter(F.size("shingles") > 0)
         base = shingled.withColumn("_h0", F.transform("shingles", _poly_hash))
-        sigs = base.select(
-            "id",
-            "shingles",
-            F.transform(
-                F.sequence(F.lit(0), F.lit(num_hashes - 1)),
-                lambda i: F.array_min(
-                    F.transform(
-                        F.col("_h0"),
-                        lambda h: ((((2 * i + 1) * 2654435761) % POLY_MOD) * h + (i * i * 9176 + 11)) % POLY_MOD,
-                    )
-                ),
-            ).alias("sig"),
-        )
-        sigs = _persist(sigs)
-
-        banded = sigs.select(
-            "id",
-            F.explode(
+        # persisted with the signature, so the per-band keys below read
+        # it instead of inlining the num_hashes-permutation fold into every band
+        sigs = _persist(
+            base.select(
+                "id",
+                "shingles",
                 F.transform(
-                    F.sequence(F.lit(0), F.lit(bands - 1)),
-                    lambda b: F.struct(
-                        b.alias("band"),
-                        F.concat_ws(
-                            ",",
-                            F.transform(
-                                F.slice(F.col("sig"), b * r + 1, r),
-                                lambda x: x.cast("string"),
-                            ),
-                        ).alias("bkey"),
+                    F.sequence(F.lit(0), F.lit(num_hashes - 1)),
+                    lambda i: F.array_min(
+                        F.transform(
+                            F.col("_h0"),
+                            lambda h: ((((2 * i + 1) * 2654435761) % POLY_MOD) * h + (i * i * 9176 + 11)) % POLY_MOD,
+                        )
                     ),
-                )
-            ).alias("bk"),
-        ).select("id", "bk.band", "bk.bkey")
-
-    # degenerate-bucket bound; with the poly family the cap itself is
-    # SQL-reproducible (QUALIFY count(*) OVER (PARTITION BY band, bkey)
-    # <= max_bucket in the oracle), so a capped run stays hash-verifiable
-    banded = _cap_hot_buckets(banded, ["band", "bkey"], max_bucket, hot_bucket_mode)
-    left, right = banded.alias("l"), banded.alias("r")
-    cand_ids = (
-        left.join(
-            right,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.bkey") == F.col("r.bkey"))
-            & (F.col("l.id") < F.col("r.id")),
+                ).alias("sig"),
+            )
         )
-        .select(F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    sh = sigs.select("id", "shingles")
-    cand = (
-        sh.withColumnRenamed("id", "id_a")
-        .withColumnRenamed("shingles", "sh_a")
-        .join(F.broadcast(cand_ids), "id_a")
-        .join(
-            sh.withColumnRenamed("id", "id_b").withColumnRenamed("shingles", "sh_b"),
-            "id_b",
+        bkeys = F.transform(
+            F.sequence(F.lit(0), F.lit(bands - 1)),
+            lambda b: F.concat_ws(
+                ",",
+                F.transform(F.slice(F.col("sig"), b * r + 1, r), lambda x: x.cast("string")),
+            ),
         )
-    )
-    jac = F.size(F.array_intersect("sh_a", "sh_b")) / F.size(
-        F.array_union("sh_a", "sh_b")
-    )
-    return (
-        cand.withColumn("jaccard", jac)
-        .filter(F.col("jaccard") >= jaccard_threshold)
-        .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
-    )
+        feats = sigs.select("id", bkeys.alias("bhash"), "shingles")
+    cand_ids = _band_candidates(feats, max_bucket, hot_bucket_mode)
+    return _verify_jaccard(feats, cand_ids, jaccard_threshold)
 
 
 def paragraph_dedup(
@@ -940,32 +824,17 @@ def simhash64_arrow():
     return pandas_udf(sh, "long")
 
 
-def simhash_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_hamming: int = 3,
-    impl: str = "arrow",
-) -> DataFrame:
-    """Near-dup pairs by 64-bit SimHash, Hamming distance ≤ ``max_hamming``
-    (< 16 required). Pigeonhole: split the hash into 4 × 16-bit chunks;
-    any pair within distance 3 must agree on ≥1 chunk → candidates from
-    4 equi-joins (via explode), verified with bit_count(xor)."""
-    # 4 chunks pigeonhole-guarantee candidates only for distance <= 3
-    # (4 differing bits can hit all 4 chunks); a larger bound would
-    # silently miss pairs, so reject it rather than under-deliver
-    if not 0 <= max_hamming <= 3:
-        raise ValueError(
-            f"max_hamming={max_hamming}: the 16-bit-chunk banding only "
-            "guarantees recall for Hamming distance <= 3"
-        )
-    sh_col = (
-        simhash64_arrow()(F.col(text_col)) if impl == "arrow" else TX.simhash64(text_col)
-    )
-    hashed = df.select(F.col(id_col).alias("id"), sh_col.alias("sh"))
+def _hamming_pairs(hashed: DataFrame, chunk_bits: int, max_hamming: int) -> DataFrame:
+    """Near-dup pairs ``(id_a, id_b, hamming)``, ``id_a < id_b``, of
+    ``hashed`` ``(id, sh)`` rows whose hashes differ in at most
+    ``max_hamming`` bits. Pigeonhole banding: the hash splits into 4
+    chunks of ``chunk_bits`` bits, and a pair within distance 3 agrees
+    on at least one, so candidates come from one equi-join on
+    (chunk, chunk key) via explode, verified with bit_count(xor)."""
     # materialize once — the chunk self-join would recompute the hash on
     # both sides otherwise
     hashed = _persist(hashed)
+    mask = (1 << chunk_bits) - 1
     chunked = hashed.select(
         "id",
         "sh",
@@ -974,7 +843,9 @@ def simhash_pairs(
                 *[
                     F.struct(
                         F.lit(i).alias("chunk"),
-                        F.shiftright(F.col("sh"), i * 16).bitwiseAND(F.lit(0xFFFF)).alias("ckey"),
+                        F.shiftright(F.col("sh"), i * chunk_bits)
+                        .bitwiseAND(F.lit(mask))
+                        .alias("ckey"),
                     )
                     for i in range(4)
                 ]
@@ -1000,6 +871,29 @@ def simhash_pairs(
         )
         .dropDuplicates(["id_a", "id_b"])
     )
+
+
+def simhash_pairs(
+    df: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    max_hamming: int = 3,
+) -> DataFrame:
+    """Near-dup pairs by 64-bit SimHash (`simhash64_arrow`), Hamming
+    distance ≤ ``max_hamming`` (≤ 3 required): pigeonhole banding on
+    4 × 16-bit chunks, see :func:`_hamming_pairs`."""
+    # 4 chunks pigeonhole-guarantee candidates only for distance <= 3
+    # (4 differing bits can hit all 4 chunks); a larger bound would
+    # silently miss pairs, so reject it rather than under-deliver
+    if not 0 <= max_hamming <= 3:
+        raise ValueError(
+            f"max_hamming={max_hamming}: the 16-bit-chunk banding only "
+            "guarantees recall for Hamming distance <= 3"
+        )
+    hashed = df.select(
+        F.col(id_col).alias("id"), simhash64_arrow()(F.col(text_col)).alias("sh")
+    )
+    return _hamming_pairs(hashed, 16, max_hamming)
 
 
 def simhash_poly(col: Column | str, bits: int = 60) -> Column:
@@ -1099,7 +993,7 @@ def simhash_poly_pairs(
     60-bit hash: pigeonhole banding on 4 × 15-bit chunks (Hamming ≤ 3 ⇒
     some chunk equal), Hamming verified join-local. Bit-equal to the
     DuckDB oracle end-to-end (hash, banding, verification) — the
-    correctness twin of the xxhash/Arrow throughput path."""
+    correctness twin of the blake2b/Arrow throughput path."""
     if not 0 <= max_hamming <= 3:
         raise ValueError("4-chunk banding guarantees recall only for Hamming <= 3")
     sh_col = (
@@ -1110,40 +1004,7 @@ def simhash_poly_pairs(
     hashed = df.filter(F.size(TX.tokens(text_col)) > 0).select(
         F.col(id_col).alias("id"), sh_col.alias("sh")
     )
-    hashed = _persist(hashed)
-    chunked = hashed.select(
-        "id",
-        "sh",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("chunk"),
-                        F.shiftright(F.col("sh"), i * 15)
-                        .bitwiseAND(F.lit(0x7FFF))
-                        .alias("ckey"),
-                    )
-                    for i in range(4)
-                ]
-            )
-        ).alias("c"),
-    ).select("id", "sh", "c.chunk", "c.ckey")
-    l, r = chunked.alias("l"), chunked.alias("r")
-    return (
-        l.join(
-            r,
-            (F.col("l.chunk") == F.col("r.chunk"))
-            & (F.col("l.ckey") == F.col("r.ckey"))
-            & (F.col("l.id") < F.col("r.id"))
-            & (TX.hamming64(F.col("l.sh"), F.col("r.sh")) <= max_hamming),
-        )
-        .select(
-            F.col("l.id").alias("id_a"),
-            F.col("r.id").alias("id_b"),
-            TX.hamming64(F.col("l.sh"), F.col("r.sh")).alias("hamming"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
-    )
+    return _hamming_pairs(hashed, 15, max_hamming)
 
 
 # ------------------------------------------------------------ n-gram Jaccard

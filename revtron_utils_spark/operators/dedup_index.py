@@ -20,6 +20,13 @@ plain parquet plus a ``_meta.json`` capturing the LSH parameters —
 probing with mismatched parameters is a silent recall-zero bug, so the
 meta is validated loudly.
 
+Featurization and verification are the pair functions' own: one Arrow
+pass over the documents (``dedup._minhash_features``, ``hash_family`` ``crc32``
+or the engine-exact ``poly``) yields the band keys and the shingle set,
+and ``dedup._verify_jaccard`` scores the candidates. Only the candidate
+join differs: new×corpus (plus new×new) against the postings, not a
+corpus self-join.
+
 No analog in the reference (row-level upsert only); extension surface.
 """
 
@@ -33,8 +40,9 @@ from pyspark.sql import functions as F
 
 from revtron_utils_spark.operators.dedup import (
     _cap_hot_buckets,
-    minhash_banded_arrow,
-    minhash_poly_features_arrow,
+    _minhash_features,
+    _persist,
+    _verify_jaccard,
 )
 
 _DEFAULTS = dict(num_hashes=64, bands=16, shingle_n=3, seed=42, hash_family="crc32")
@@ -67,24 +75,27 @@ def _featurize(
             f"dedup index: unknown hash_family {p.get('hash_family')!r}"
             " (expected 'crc32' or 'poly')"
         )
-    if p.get("hash_family") == "poly":
-        # engine-reproducible family: band keys become strings, and the
-        # whole index+probe pipeline gains a DuckDB oracle twin (the
-        # seed is unused — the poly permutations are fixed)
-        feats = minhash_poly_features_arrow(
-            p["num_hashes"], p["bands"], p["shingle_n"]
-        )(F.col(text_col))
-        key = "f.bkeys"
-    else:
-        feats = minhash_banded_arrow(
-            p["num_hashes"], p["bands"], p["shingle_n"], p["seed"]
-        )(F.col(text_col))
-        key = "f.bhash"
-    return (
-        df.select(F.col(id_col).cast("long").alias("id"), feats.alias("f"))
-        .select("id", F.col(key).alias("bhash"), F.col("f.shingles").alias("shingles"))
-        .filter(F.size("shingles") > 0)
+    # poly: engine-reproducible family — band keys become strings, and
+    # the whole index+probe pipeline gains a DuckDB oracle twin
+    return _minhash_features(
+        df,
+        F.col(id_col).cast("long"),
+        text_col,
+        p["hash_family"],
+        p["num_hashes"],
+        p["bands"],
+        p["shingle_n"],
+        p["seed"],
     )
+
+
+def _index_frames(base: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Featurized ``(id, bhash, shingles)`` → postings ``(band, bhash,
+    id)`` and features ``(id, shingles)``."""
+    postings = base.select("id", F.posexplode("bhash").alias("band", "bhash")).select(
+        "band", "bhash", "id"
+    )
+    return postings, base.select("id", "shingles")
 
 
 def build_minhash_index(
@@ -97,13 +108,7 @@ def build_minhash_index(
     postings ``(band, bhash, id)`` — the LSH probe target; features
     ``(id, shingles)`` — the verification side. Callers persist/write
     both (see :func:`write_minhash_index`)."""
-    p = {**_DEFAULTS, **params}
-    base = _featurize(df, text_col, id_col, p)
-    postings = base.select("id", F.posexplode("bhash").alias("band", "bhash")).select(
-        "band", "bhash", "id"
-    )
-    features = base.select("id", "shingles")
-    return postings, features
+    return _index_frames(_featurize(df, text_col, id_col, {**_DEFAULTS, **params}))
 
 
 def probe_minhash_index(
@@ -131,17 +136,12 @@ def probe_minhash_index(
     drop/sample recall accounting. Capping the target side alone bounds
     the join: a new posting meeting a capped bucket matches at most
     ``max_bucket`` retained corpus rows."""
-    from revtron_utils_spark.operators.dedup import _persist
-
     p = {**_DEFAULTS, **params}
     # the Arrow featurization of the new batch feeds the bucket-size
     # aggregate (when capped), the candidate join, and the verification
     # side — persist so the pandas-UDF pass runs once, not 3-4 times
     new_base = _persist(_featurize(new_df, text_col, id_col, p))
-    new_posts = new_base.select("id", F.posexplode("bhash").alias("band", "bhash")).select(
-        "band", "bhash", "id"
-    )
-    new_feats = new_base.select("id", "shingles")
+    new_posts, new_feats = _index_frames(new_base)
 
     # candidates: new×corpus always; new×new within the batch optionally
     target = postings.unionByName(new_posts) if include_new_new else postings
@@ -164,23 +164,7 @@ def probe_minhash_index(
     # deterministically (anti-join + union, not an arbitrary
     # dropDuplicates pick)
     all_feats = features.join(new_feats, "id", "left_anti").unionByName(new_feats)
-    cand = (
-        all_feats.withColumnRenamed("id", "id_a")
-        .withColumnRenamed("shingles", "sh_a")
-        .join(F.broadcast(cand_ids), "id_a")
-        .join(
-            all_feats.withColumnRenamed("id", "id_b").withColumnRenamed(
-                "shingles", "sh_b"
-            ),
-            "id_b",
-        )
-    )
-    jac = F.size(F.array_intersect("sh_a", "sh_b")) / F.size(F.array_union("sh_a", "sh_b"))
-    return (
-        cand.withColumn("jaccard", jac)
-        .filter(F.col("jaccard") >= jaccard_threshold)
-        .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
-    )
+    return _verify_jaccard(all_feats, cand_ids, jaccard_threshold)
 
 
 # ------------------------------------------------------------ directory API

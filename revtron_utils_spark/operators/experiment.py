@@ -11,13 +11,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T  # noqa: F401
 
 from .guards import integral_long  # noqa: F401
-from .guards import require_sum_sq_width as _sum_sq_width
+from .guards import require_sum_sq_width
 
-
-def _require_sum_sq_width(df: DataFrame, col: str, op_name: str) -> None:
-    """Fail fast when Σ value² could overflow DECIMAL(38,0) — measured
-    from the data; shared implementation in :mod:`.guards`."""
-    _sum_sq_width(df, col, op_name)
 
 def grouped_linreg(
     df: DataFrame,
@@ -704,8 +699,6 @@ def effect_sizes(
     cohens_d, hedges_g)`` — NULL d/g when either arm has < 2 rows or
     the pooled variance is 0.
     """
-    from .guards import require_sum_sq_width
-
     require_sum_sq_width(df, value_col, "effect_sizes")
     keys = list(by or [])
     dec = lambda c: c.cast("decimal(38,0)")
@@ -1341,7 +1334,7 @@ def sample_size_power(
     """
     from .guards import integral_long
 
-    _require_sum_sq_width(df, value_col, "sample_size_power")
+    require_sum_sq_width(df, value_col, "sample_size_power")
     keys = list(by or [])
     dec = lambda c: c.cast("decimal(38,0)")
     v = dec(integral_long(df, value_col, "sample_size_power"))

@@ -1,4 +1,4 @@
-"""Contract guards: bounded spines, sum-of-squares width, integral casts.
+"""Contract guards: bounded spines, sum-of-squares width, integral casts and ids.
 
 Several fold/window operators (`profile.ks_test`, `evaluation.
 gain_curve`, `timeseries.ewma`/`holt_linear`, the rank-test family)
@@ -188,3 +188,24 @@ def integral_long(df: DataFrame, col: str, op_name: str) -> Column:
         .otherwise(c)
         .cast("long")
     )
+
+
+_INTEGRAL_IDS = ("tinyint", "smallint", "int", "bigint")
+
+
+def require_integral_id(
+    df: DataFrame, id_col: str, hash_name: str = "deterministic hash"
+) -> None:
+    """Fail fast when an id-hashed operator gets a non-integral id: the
+    modular hash of a string id silently yields NULL under non-ANSI casts
+    (routing every row to the last split, out of the sample, or out of
+    every bootstrap resample while it still counts in the point
+    estimate). Callers should pre-hash string ids to a long (e.g.
+    ``xxhash64``), with the caveat that the DuckDB oracle can then no
+    longer reproduce the buckets."""
+    dt = df.schema[id_col].dataType.simpleString()
+    if dt not in _INTEGRAL_IDS:
+        raise TypeError(
+            f"id column {id_col!r} has type {dt}; the {hash_name} "
+            "requires an integral id (pre-hash strings to a long first)"
+        )

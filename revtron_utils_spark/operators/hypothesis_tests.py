@@ -14,13 +14,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T  # noqa: F401
 
 from .guards import integral_long  # noqa: F401
-from .guards import require_sum_sq_width as _sum_sq_width
+from .guards import require_sum_sq_width
 
-
-def _require_sum_sq_width(df: DataFrame, col: str, op_name: str) -> None:
-    """Fail fast when Σ value² could overflow DECIMAL(38,0) — measured
-    from the data; shared implementation in :mod:`.guards`."""
-    _sum_sq_width(df, col, op_name)
 
 def ks_test(
     df: DataFrame,
@@ -501,7 +496,7 @@ def anova_oneway(
     df = require_bounded_spines(
         df, [(group_col, max_groups, group_col)], "anova_oneway"
     )
-    _require_sum_sq_width(df, value_col, "anova_oneway")
+    require_sum_sq_width(df, value_col, "anova_oneway")
     dec = lambda c: c.cast("decimal(38,0)")
     v = integral_long(df, value_col, "anova_oneway")
     grp = df.groupBy(F.col(group_col).alias("_g")).agg(
@@ -1136,7 +1131,7 @@ def welch_anova(
     from .guards import require_bounded_spines
 
     df = require_bounded_spines(df, [(group_col, max_groups, group_col)], "welch_anova")
-    _require_sum_sq_width(df, value_col, "welch_anova")
+    require_sum_sq_width(df, value_col, "welch_anova")
     dec = lambda c: c.cast("decimal(38,0)")
     v = integral_long(df, value_col, "welch_anova")
     grp = df.groupBy(F.col(group_col).alias("_g")).agg(
@@ -1307,7 +1302,7 @@ def grubbs_test(
     """
     from pyspark.sql import Window
 
-    _require_sum_sq_width(df, value_col, "grubbs_test")
+    require_sum_sq_width(df, value_col, "grubbs_test")
     dec = lambda c: c.cast("decimal(38,0)")
     base = df.select(
         F.col(group_col).alias("_g"),
@@ -1707,7 +1702,7 @@ def tukey_hsd(
     from .guards import require_bounded_spines
 
     df = require_bounded_spines(df, [(group_col, max_groups, group_col)], "tukey_hsd")
-    _require_sum_sq_width(df, value_col, "tukey_hsd")
+    require_sum_sq_width(df, value_col, "tukey_hsd")
     dec = lambda c: c.cast("decimal(38,0)")
     v = integral_long(df, value_col, "tukey_hsd")
     grp = df.groupBy(F.col(group_col).alias("_g")).agg(

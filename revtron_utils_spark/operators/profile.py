@@ -189,16 +189,3 @@ def profile_table(df: DataFrame, approx_distinct: bool = True) -> DataFrame:
         "null_rate double, n_distinct bigint, min double, max double, mean double"
     )
     return spark.createDataFrame(out, schema)
-
-
-def _require_sum_sq_width(df: DataFrame, col: str, op_name: str) -> None:
-    """Fail fast when Σ value² could overflow DECIMAL(38,0) — MEASURED
-    from the data (the tfidf/hbos house rule: silent Spark non-ANSI
-    overflow NULLs exactly the extreme rows while DuckDB's HUGEINT
-    keeps going, so the engines would diverge invisibly). Shared
-    implementation lives in :mod:`.guards` (annotation.cronbach_alpha
-    needs it too)."""
-    from .guards import require_sum_sq_width
-
-    require_sum_sq_width(df, col, op_name)
-

@@ -486,9 +486,10 @@ def conformal_bounds(
     Output: ``(*by, n_train, n_cal, pred, q_bound)`` — groups missing
     either half are dropped (both engines).
     """
-    from .curation import HASH_MOD, _require_integral_id, id_hash
+    from .curation import HASH_MOD, id_hash
+    from .guards import require_integral_id
 
-    _require_integral_id(df, id_col)
+    require_integral_id(df, id_col)
     dt = df.schema[value_col].dataType.simpleString()
     if dt not in ("tinyint", "smallint", "int", "bigint", "long"):
         raise ValueError(

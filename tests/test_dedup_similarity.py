@@ -663,6 +663,45 @@ def test_spread_if_narrow_passes_shuffled_and_in_memory_frames_through(spark, tm
     assert exchanges(_spread_if_narrow(narrow)) == exchanges(narrow) + 1
 
 
+def test_spread_if_narrow_looks_through_cached_scans(spark, tmp_path):
+    """A cached one-file scan still holds one split: the spread looks
+    through the InMemoryRelation to the scan it caches and adds exactly
+    one round-robin Exchange. A cached shuffled frame gains none. The
+    sizing runs no Spark job."""
+    from revtron_utils_spark.operators.dedup import _spread_if_narrow
+
+    def round_robins(df):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        return plan.count("RoundRobinPartitioning")
+
+    spark.range(100).selectExpr("id AS doc_id", "'a b c' AS text").coalesce(
+        1
+    ).write.parquet(str(tmp_path / "docs"))
+    docs = spark.read.parquet(str(tmp_path / "docs"))
+    cached = docs.cache()
+    shuffled = docs.repartition(3, "text").cache()
+    sc = spark.sparkContext
+    group = "spread-cached-scan"
+    try:
+        narrow = cached.select("doc_id", "text")
+        wide = shuffled.select("doc_id", "text")
+        sc.setJobGroup(group, group)
+        try:
+            out_narrow, out_wide = _spread_if_narrow(narrow), _spread_if_narrow(wide)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        assert not sc.statusTracker().getJobIdsForGroup(group)
+        assert round_robins(out_narrow) == round_robins(narrow) + 1
+        assert out_wide is wide
+        assert round_robins(out_wide) == round_robins(wide)
+        assert sorted(r.doc_id for r in out_narrow.collect()) == list(range(100))
+    finally:
+        cached.unpersist()
+        shuffled.unpersist()
+
+
 def test_hashed_tf_embedding_l2_matches_counts_over_norm(spark):
     """The r13 let-binding rewrite of the L2 normalization (single-pass
     counts + norm instead of re-evaluating the counts aggregate inside

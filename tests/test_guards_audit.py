@@ -354,6 +354,41 @@ def test_bootstrap_rejects_non_integral_id(spark):
         poisson_bootstrap_ci(df, "uid", "v", ["g"], n_boot=8)
 
 
+def test_integral_id_guard_takes_every_integral_type(spark):
+    """One integral-id guard for the id-hashed operators: a smallint or
+    tinyint id gives the same splits as the same ids cast to bigint, and
+    a string id raises the same TypeError text from curation and from
+    bootstrap."""
+    from revtron_utils_spark.operators import curation as C
+    from revtron_utils_spark.operators.bootstrap import poisson_bootstrap_ci
+
+    base = spark.range(200).select((F.col("id") - 100).alias("k"))
+    weights = {"train": 0.8, "test": 0.2}
+
+    def splits(dtype):
+        df = base.select(F.col("k").cast(dtype).alias("k"))
+        return sorted(
+            (r.k, r.split) for r in C.hash_split(df, "k", weights, seed=7).collect()
+        )
+
+    wide = splits("bigint")
+    assert splits("smallint") == wide
+    assert splits("tinyint") == wide
+    strings = base.select(
+        F.col("k").cast("string").alias("k"), F.lit(1).alias("v"), F.lit("g").alias("g")
+    )
+    msg = (
+        "id column 'k' has type string; the {} requires an integral id "
+        "(pre-hash strings to a long first)"
+    )
+    with pytest.raises(TypeError) as err:
+        C.hash_split(strings, "k", weights)
+    assert str(err.value) == msg.format("deterministic hash")
+    with pytest.raises(TypeError) as err:
+        poisson_bootstrap_ci(strings, "k", "v", ["g"], n_boot=8)
+    assert str(err.value) == msg.format("deterministic bootstrap hash")
+
+
 def test_distribution_match_oracle_literal_escaping():
     """ADVICE r7: bucket values with quotes / non-string types render as
     valid, TYPED DuckDB literals."""

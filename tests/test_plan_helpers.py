@@ -1,6 +1,7 @@
 """Each recurring plan pattern is written once, in its helper: the spread
-of a narrow scan, the per-round lineage cut and the bounded-spine gate
-(read from source, no Spark)."""
+of a narrow scan, the per-round lineage cut, the bounded-spine gate, the
+MinHash featurizer, the exact-Jaccard verifier and the chunked Hamming
+join (read from source, no Spark)."""
 
 from __future__ import annotations
 
@@ -23,6 +24,20 @@ HOMES = {
     "setCheckpointDir(": [(OPS / "graph.py", "_lineage_cutter")],
     ".checkpoint(": [(OPS / "graph.py", "_lineage_cutter")],
     "_spine_gate": [(OPS / "guards.py", "require_bounded_spines")],
+    "array_union(": [(OPS / "dedup.py", "_verify_jaccard")],
+    "hamming64(": [
+        (OPS / "dedup.py", "_hamming_pairs"),
+        (ROOT / "revtron_utils_spark" / "functions" / "text.py", "hamming64"),
+    ],
+    # the factory's own definition line is its home too
+    "minhash_banded_arrow(": [
+        (OPS / "dedup.py", "_minhash_features"),
+        (OPS / "dedup.py", "minhash_banded_arrow"),
+    ],
+    "minhash_poly_features_arrow(": [
+        (OPS / "dedup.py", "_minhash_features"),
+        (OPS / "dedup.py", "minhash_poly_features_arrow"),
+    ],
 }
 
 
