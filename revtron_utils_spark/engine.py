@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .dsl import Where, compile_where
-from .io import read_parquet, replace_parquet
+from .io import local_frame, read_parquet, replace_parquet
 from .operators.merge import (
     MergeKeyError,
     delete_where,
@@ -121,8 +121,14 @@ class Engine:
     def __post_init__(self) -> None:
         if self.warehouse_dir:
             Path(self.warehouse_dir).mkdir(parents=True, exist_ok=True)
-        # liveness probe, mirroring `select 1 as is_alive` (main.py:45-49)
-        assert self.spark.sql("select 1 as is_alive").collect()[0].is_alive == 1
+        # liveness probe, mirroring `select 1 as is_alive` (main.py:45-49):
+        # a VALUES relation collects from the driver, so it fires no Spark job
+        try:
+            rows = self.spark.sql("SELECT * FROM VALUES (1) AS t(is_alive)").collect()
+        except Exception as e:  # a stopped session fails with an AttributeError
+            raise RuntimeError("Spark session failed the liveness probe") from e
+        if [r.is_alive for r in rows] != [1]:
+            raise RuntimeError(f"Spark session failed the liveness probe: {rows}")
 
     # ------------------------------------------------------------------ #
     # catalog (S2-S6)
@@ -416,7 +422,7 @@ class Engine:
                 f"table {table_name!r} is attached (read-only external data); "
                 "creating a managed table of the same name would shadow it"
             )
-        empty = self.spark.createDataFrame([], declared)
+        empty = local_frame(self.spark, [], declared)
         self._write_managed(table_name, empty)
 
     def add_column(self, table_name: str, column: ColumnModel | dict) -> None:
@@ -587,7 +593,7 @@ class Engine:
         # record's own key order, silently swapping columns when a later
         # record lists keys differently than records[0]
         rows = [tuple(r.get(k) for k in keys) for r in records]
-        return self.spark.createDataFrame(rows, schema=schema)
+        return local_frame(self.spark, rows, schema)
 
     def _write_managed(self, table_name: str, df: DataFrame) -> None:
         """Publish the new table image: a manifest commit in versioned

@@ -51,6 +51,7 @@ from ..functions import vectors as VX
 # copy here once drifted a hand-maintained "must match" comment apart).
 from ..functions.classifier import POLY_MOD
 from ..functions.classifier import token_poly_hash as _poly_hash
+from .guards import _INTEGRAL_IDS
 
 MERSENNE_P = (1 << 31) - 1  # 2^31-1, prime
 
@@ -1273,9 +1274,7 @@ def embedding_neardup_pairs(
         F.col(id_col).alias("id"), *[F.col(c) for c in block_cols], q.alias("q")
     ).withColumn("nrm", F.sqrt(VX.int_dot(F.col("q"), F.col("q"))))
 
-    id_integral = df.schema[id_col].dataType.simpleString() in (
-        "byte", "short", "int", "integer", "bigint", "long"
-    )
+    id_integral = df.schema[id_col].dataType.simpleString() in _INTEGRAL_IDS
     if use_arrow and not block_cols and not lsh_planes and id_integral:
         # exact all-pairs: executor-side chunk-pair joins + BLAS matmul
         # — each vector ships once per chunk pair (never through the

@@ -38,6 +38,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from revtron_utils_spark.io import read_parquet
 from revtron_utils_spark.operators.dedup import (
     _cap_hot_buckets,
     _minhash_features,
@@ -215,8 +216,8 @@ def probe_minhash_index_path(
     bound, not a signature parameter."""
     spark = SparkSession.getActiveSession() or new_df.sparkSession
     p = _load_meta(json.loads((Path(path) / "_meta.json").read_text()))
-    postings = spark.read.parquet(str(Path(path) / "postings"))
-    features = spark.read.parquet(str(Path(path) / "features"))
+    postings = read_parquet(spark, str(Path(path) / "postings"))
+    features = read_parquet(spark, str(Path(path) / "features"))
     return probe_minhash_index(
         new_df,
         postings,

@@ -20,6 +20,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import vectors as VX
+from ..io import read_parquet
 
 
 def _query_vec_col(query_vec: Sequence[float], quantized: bool) -> Column:
@@ -295,7 +296,7 @@ class IVFIndex:
             key=lambda cid: -cos(query_vec, self.centroids[cid]),
         )
         probe = ranked[:nprobe]
-        df = self.spark.read.parquet(self.index_path).filter(F.col("cluster_id").isin(probe))
+        df = read_parquet(self.spark, self.index_path).filter(F.col("cluster_id").isin(probe))
         return cosine_topk(df, query_vec, k=k, vec_col=vec_col, id_col=id_col)
 
 

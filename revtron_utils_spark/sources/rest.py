@@ -35,6 +35,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from ..io import local_frame
+
 # Constants mirroring the reference's protocol envelope
 # (salesforce/main.py:119-120, 152, 169)
 ID_PAGE_SIZE = 200       # cursor page size (Sforce-Query-Options batchSize)
@@ -94,6 +96,9 @@ _SF_TYPE_MAP: dict[str, T.DataType] = {
 }
 
 
+_ID_SCHEMA = T.StructType([T.StructField("id", T.StringType(), True)])
+
+
 def schema_from_describe(fields: list[dict]) -> T.StructType:
     return T.StructType(
         [
@@ -128,10 +133,10 @@ class RestSource:
                 ids = ids[: spec.limit]
                 break
         if not ids:
-            return self.spark.createDataFrame([], schema)
+            return local_frame(self.spark, [], schema)
 
         n_parts = max(1, min(self.max_parallelism, math.ceil(len(ids) / DATA_BATCH_SIZE)))
-        ids_df = self.spark.createDataFrame([(i,) for i in ids], "id string").repartition(n_parts)
+        ids_df = local_frame(self.spark, [(i,) for i in ids], _ID_SCHEMA).repartition(n_parts)
 
         transport = self.transport
         base_spec = QuerySpec(**{**spec.__dict__, "id_batch": None})

@@ -20,6 +20,7 @@ from typing import Any, Iterator, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..io import local_frame
 from .rest import (
     DATA_QUERY_LIMIT,
     QuerySpec,
@@ -194,7 +195,7 @@ class Salesforce:
     def _as_df(self, data: DataFrame | list[dict]) -> DataFrame:
         if isinstance(data, DataFrame):
             return data
-        return self.spark.createDataFrame(data)
+        return local_frame(self.spark, data)
 
 
 class FakeSalesforceTransport:

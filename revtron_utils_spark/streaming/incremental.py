@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..engine import Engine
-from ..io import replace_parquet
+from ..io import read_parquet, replace_parquet
 from ..operators.merge import _newest_per_key, upsert_merge
 from .runner import run_available_now
 
@@ -223,7 +223,7 @@ def _stream_fold(
     def apply_batch(batch_df: DataFrame, epoch_id: int) -> None:
         part = partial(batch_df)
         if state.exists():
-            part = merge(spark.read.parquet(str(state)), part)
+            part = merge(read_parquet(spark, str(state)), part)
         replace_parquet(part.coalesce(1), state)
 
     writer = _file_stream(spark, source_dir, schema).writeStream.foreachBatch(apply_batch)

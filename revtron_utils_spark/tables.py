@@ -38,6 +38,7 @@ from typing import Sequence
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 
+from .io import footer_schema
 from .operators.merge import delete_where, keyed_update, observe_hits, upsert_merge
 
 
@@ -284,13 +285,7 @@ class VersionedTable:
                     untouched.append(f)
 
             if matched:
-                reader = self.spark.read
-                if evolved:
-                    # matched files may mix pre- and post-evolution
-                    # schemas — without mergeSchema Spark infers from an
-                    # arbitrary file and silently drops evolved columns
-                    reader = reader.option("mergeSchema", "true")
-                target = reader.parquet(*[str(Path(self.path) / f) for f in matched])
+                target = self._read_files(matched, evolved)
             else:
                 # schema-only empty target: all source rows are inserts
                 target = self.read(base).limit(0)
@@ -332,12 +327,22 @@ class VersionedTable:
         writers' uncommitted files are invisible by construction."""
         v = self.latest_version() if version is None else version
         m = self._manifest(v)
-        files = [str(Path(self.path) / f) for f in m["files"]]
-        if not files:
+        if not m["files"]:
             raise FileNotFoundError(f"version {v} has no files")
-        reader = self.spark.read
-        if m.get("evolved"):
-            reader = reader.option("mergeSchema", "true")
+        return self._read_files(m["files"], bool(m.get("evolved")))
+
+    def _read_files(self, rel_paths: Sequence[str], evolved: bool) -> DataFrame:
+        """Read data files of this table. An evolved version mixes pre-
+        and post-evolution schemas, so Spark merges every footer's
+        (without ``mergeSchema`` it infers from an arbitrary file and
+        silently drops evolved columns). Otherwise all files share one
+        schema, and the first file's footer gives it without the
+        inference job (``io.footer_schema``)."""
+        files = [str(Path(self.path) / f) for f in rel_paths]
+        if evolved:
+            return self.spark.read.option("mergeSchema", "true").parquet(*files)
+        schema = footer_schema(files[0])
+        reader = self.spark.read if schema is None else self.spark.read.schema(schema)
         return reader.parquet(*files)
 
     # ----------------------------------------------------------- cleanup

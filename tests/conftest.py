@@ -71,6 +71,29 @@ def spark():
     yield spark
 
 
+@pytest.fixture()
+def count_jobs(spark):
+    """``count_jobs(fn)`` -> (Spark jobs ``fn`` fired, its result),
+    counted through a fresh job group."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def count(fn):
+        group = f"budget-{uuid.uuid4().hex[:8]}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        # job-start events reach the status store through the listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group)), out
+
+    return count
+
+
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR

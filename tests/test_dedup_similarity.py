@@ -296,6 +296,28 @@ def test_embedding_neardup_degenerate_inputs(emb):
     assert DD.embedding_neardup_pairs(emb.limit(1), threshold=0.0).count() == 0
 
 
+@pytest.mark.parametrize("id_type", ["tinyint", "smallint"])
+def test_narrow_integral_ids_take_the_matmul_path(emb, monkeypatch, id_type):
+    """Spark names narrow ints ``tinyint``/``smallint``: such ids take
+    the matmul path, as ``bigint`` ids do, and give the same pairs."""
+    matmul, calls = DD._neardup_matmul, []
+    monkeypatch.setattr(
+        DD, "_neardup_matmul", lambda *a, **k: calls.append(1) or matmul(*a, **k)
+    )
+    small = emb.filter(F.col("vec_id") < 100)
+
+    def pairs(df):
+        return {
+            (r.id_a, r.id_b, r.cosine)
+            for r in DD.embedding_neardup_pairs(df, threshold=0.3).collect()
+        }
+
+    want = pairs(small)
+    got = pairs(small.withColumn("vec_id", F.col("vec_id").cast(id_type)))
+    assert calls == [1, 1]
+    assert got == want and want
+
+
 def test_cosine_topk_self_is_first(emb):
     q = emb.orderBy("vec_id").first()
     top = SIM.cosine_topk(emb, q.embedding, k=5).collect()

@@ -69,3 +69,63 @@ def test_read_parquet_follows_a_flip_to_nanosecond_timestamps(spark, tmp_path):
     df = read_parquet(spark, str(link))
     assert dict(df.dtypes)["ts"] == "timestamp"
     assert sorted(r["ts"] for r in df.collect()) == ts
+
+
+def _local_cases():
+    import datetime as dt
+    from decimal import Decimal
+
+    from pyspark.sql import Row
+
+    ts = dt.datetime(2024, 1, 2, 3, 4, 5, 123456)
+    return {
+        "atomic": (
+            [(1, "a", 1.5, True, ts, dt.date(2024, 2, 3)), (None,) * 6],
+            "a bigint, b string, c double, d boolean, e timestamp, f date",
+        ),
+        "narrow": ([(1, b"ab", 2, 3.5)], "a tinyint, b binary, c smallint, d float"),
+        "nested": (
+            [(1, [ts], {"k": 1}, (1, "s"))],
+            "a int, b array<timestamp>, c map<string,int>, d struct<x:int,y:string>",
+        ),
+        "interval_ntz": ([(dt.timedelta(seconds=3), ts)], "i interval day to second, n timestamp_ntz"),
+        "decimal": ([(Decimal("1.005"),)], "d decimal(10,2)"),
+        "inferred_dicts": ([{"Id": "x", "value": 1.0}, {"Id": "y", "value": None}], None),
+        "inferred_rows": ([Row(a=1, b=[1, 2], c={"k": ts})], None),
+        "empty": ([], "k bigint"),
+    }
+
+
+def test_local_frame_matches_create_dataframe(spark):
+    """``local_frame`` gives the schema and rows ``createDataFrame`` gives,
+    in a session whose time zone is not UTC, and (except for decimals,
+    which keep the list path) scans a local relation, not a PythonRDD."""
+    from pyspark.sql import types as T
+
+    from revtron_utils_spark.io import local_frame
+
+    prev = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    try:
+        for name, (rows, ddl) in _local_cases().items():
+            schema = None if ddl is None else T._parse_datatype_string(ddl)
+            want = spark.createDataFrame(rows, schema)
+            got = local_frame(spark, rows, schema)
+            assert got.schema == want.schema, name
+            assert got.collect() == want.collect(), name
+            plan = got._jdf.queryExecution().executedPlan().toString()
+            assert ("ExistingRDD" in plan) == (name == "decimal"), (name, plan)
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", prev)
+
+
+def test_local_frame_keeps_create_dataframe_errors(spark):
+    import pytest
+    from pyspark.sql import types as T
+
+    from revtron_utils_spark.io import local_frame
+
+    with pytest.raises(TypeError):
+        local_frame(spark, [("x",)], T._parse_datatype_string("a bigint"))
+    with pytest.raises(Exception, match="empty"):
+        local_frame(spark, [])
